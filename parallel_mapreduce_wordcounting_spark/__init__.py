@@ -21,7 +21,7 @@ Design principles (SURVEY.md §1.2, §4):
   two-phase scale path (see operators/similarity.py, operators/dedup.py).
 """
 
-from .registry import REGISTRY, register, queries, oracle_sql  # noqa: F401
+from .registry import B_PREFIXES, REGISTRY, register, queries, oracle_sql  # noqa: F401
 from .sources.loader import load_table  # noqa: F401
 
 # Import operator modules for their registration side effects.
@@ -54,58 +54,14 @@ from .operators import (  # noqa: F401,E402
     chunking,
     scale_ops,
     graph,
-    staged_r8,
-    staged_r9,
-    staged_r10,
-    staged_r11,
-    staged_r12,
-    staged_r13,
-    staged_r14,
-    staged_r15,
-    staged_r16,
-    staged_r17,
-    staged_r18,
-    staged_r19,
-    staged_r20,
-    staged_r21,
-    staged_r22,
-    staged_r23,
-    staged_r24,
-    staged_r25,
-    staged_r26,
-    staged_r27,
-    staged_r28,
-    staged_r29,
-    staged_r30,
-    staged_r31,
-    staged_r32,
-    staged_r33,
-    staged_r34,
-    staged_r35,
-    staged_r36,
-    staged_r37,
-    staged_r38,
-    staged_r39,
-    staged_r40,
-    staged_r41,
-    staged_r42,
-    staged_r43,
-    staged_r44,
-    staged_r45,
-    staged_r46,
-    staged_r47,
-    staged_r48,
-    staged_r49,
-    staged_r50,
-    staged_r51,
-    staged_r52,
-    staged_r53,
-    staged_r54,
-    staged_r55,
-    staged_r56,
-    staged_r57,
-    staged_r58,
+    staged_modules,
 )
+
+# Each staged_r* wave module with DEV_CASES registers itself on import.
+for _mod in staged_modules():
+    for _key, _fn, _oracle in getattr(_mod, "DEV_CASES", ()):
+        register(_key, oracle=_oracle, tier="B" if _key.startswith(B_PREFIXES) else "C")(_fn)
+del _mod, _key, _fn, _oracle
 
 from . import pipelines  # noqa: F401,E402  (corpus-curation composition API)
 

@@ -5,7 +5,8 @@ used to be hand-duplicated across plan_audit, scale_up and the invariance
 tests, so adding a wave required touching all of them and a missed entry
 silently dropped those operators from audit coverage (ADVICE r7). Discover
 dynamically instead — a new staged_rN.py file is picked up everywhere the
-moment it exists.
+moment it exists, including by the package root, which registers each
+wave's ``DEV_CASES``.
 """
 
 from __future__ import annotations

@@ -1,14 +1,7 @@
 """ML-evaluation / sparse-retrieval / experimentation wave — REGISTERED in
-round 8 (the round-7 window drained; these 20 keys joined the verification
-rotation via scripts/register_staged.py). Originally staged because the
-next verification window (implemented + oracle-tested now, deliberately NOT
-``@register``-ed): the round-7 window is exactly full — 43 unverified keys
-from the staged_r8/r9 registrations plus 7 re-verify slots draining the
-stalest r01 greens — so registering these now would push never-verified keys
-outside the driver's 50-key window (COVERAGE.md "verification budget").
-tests/test_staged_r10.py runs the same fn-vs-DuckDB compare the registry
-harness would, at sf0.001 AND sf0.01; the next round adds the decorators
-without touching the bodies.
+round 8 through the ``@register`` decorators on its operators (the module
+has no ``DEV_CASES``). tests/test_oracle_parity.py runs the fn-vs-DuckDB
+compare; tests/test_staged_r10.py holds the independent property checks.
 
 Contents:
 

@@ -1,13 +1,9 @@
-"""Causal-inference / time-series / retrieval-infrastructure wave —
-REGISTERED in round 8 (joined the verification rotation via
-scripts/register_staged.py). Originally STAGED
-for a future verification window (implemented + oracle-tested now,
-deliberately NOT ``@register``-ed): the round-7 window closed at exactly
-50/50 and round 8's budget is already earmarked for ``staged_r10``'s 20
-keys, so these wait one more rotation (COVERAGE.md "verification budget").
-tests/test_staged_r11.py runs the same fn-vs-DuckDB compare the registry
-harness would, at sf0.001 AND sf0.01; a later round adds the decorators
-without touching the bodies.
+"""Causal-inference / time-series / retrieval-infrastructure wave
+(registered since round 8). Like every ``staged_r*`` module with
+``DEV_CASES``, it registers itself on import: the package root registers
+each ``(key, fn, oracle)`` entry. tests/test_oracle_parity.py runs the
+fn-vs-DuckDB compare; tests/test_staged_r11.py holds the independent
+property checks.
 
 Contents (batch A — experimentation & time-series statistics):
 
@@ -76,7 +72,6 @@ from pyspark.sql import functions as F
 
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
-from ..registry import register
 
 _D38 = "decimal(38,0)"
 
@@ -121,7 +116,6 @@ EVENT_DID_ORACLE = (
 )
 
 
-@register("event_did", oracle=EVENT_DID_ORACLE, tier="C")
 def event_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-in-differences estimate of the treatment effect on event
     value: treatment arm = ``user_id % 2`` (event_ab_test's deterministic
@@ -221,7 +215,6 @@ STAT_WELCH_TTEST_ORACLE = (
 )
 
 
-@register("stat_welch_ttest", oracle=STAT_WELCH_TTEST_ORACLE, tier="C")
 def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's unequal-variance t statistic between two event populations
     (``purchase`` vs ``view`` values), with the Welch–Satterthwaite
@@ -321,7 +314,6 @@ EVENT_AUDIENCE_OVERLAP_ORACLE = (
 )
 
 
-@register("event_audience_overlap", oracle=EVENT_AUDIENCE_OVERLAP_ORACLE, tier="C")
 def event_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise audience overlap between event types: for every unordered
     type pair, the number of users who did BOTH, each side's audience size,
@@ -409,7 +401,6 @@ WIN_ROLLING_SLOPE_ORACLE = (
 )
 
 
-@register("win_rolling_slope", oracle=WIN_ROLLING_SLOPE_ORACLE, tier="C")
 def win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-7-observation OLS trend slope of daily revenue per event
     type — the windowed trend detector (is this metric accelerating?)
@@ -491,7 +482,6 @@ EVENT_CHANGEPOINT_ORACLE = (
 )
 
 
-@register("event_changepoint", oracle=EVENT_CHANGEPOINT_ORACLE, tier="C")
 def event_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM mean-shift changepoint per event type: the day where the
     cumulative deviation of daily revenue from its per-type mean peaks —
@@ -560,7 +550,6 @@ SAMPLE_RESERVOIR_ORACLE = (
 )
 
 
-@register("sample_reservoir", oracle=SAMPLE_RESERVOIR_ORACLE, tier="B")
 def sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic distributed "reservoir" sample: the k rows with the
     SMALLEST md5(key) priority — bottom-k / min-wise sampling, the
@@ -635,7 +624,6 @@ STAT_OLS_MULTI_ORACLE = (
 )
 
 
-@register("stat_ols_multi", oracle=STAT_OLS_MULTI_ORACLE, tier="C")
 def stat_ols_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO-feature OLS — extendedprice ~ quantity + discount — solved in
     closed form by Cramer's rule on the 3×3 normal equations, entirely from
@@ -737,7 +725,6 @@ GRAPH_ADAMIC_ADAR_ORACLE = (
 )
 
 
-@register("graph_adamic_adar", oracle=GRAPH_ADAMIC_ADAR_ORACLE, tier="B")
 def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adamic–Adar link-prediction score between suppliers over the
     part–supplier bipartite graph: AA(a,b) = Σ_{shared part p} 1/ln(deg p)
@@ -833,7 +820,6 @@ PIPELINE_TOKEN_BUDGET_ORACLE = (
 )
 
 
-@register("pipeline_token_budget", oracle=PIPELINE_TOKEN_BUDGET_ORACLE, tier="B")
 def pipeline_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source token-budget curation: rank each source's documents by a
     quality key (length-descending here — longer docs carry more signal per
@@ -923,7 +909,6 @@ EVENT_INTERPOLATE_ORACLE = (
 )
 
 
-@register("event_interpolate", oracle=EVENT_INTERPOLATE_ORACLE, tier="C")
 def event_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear gap interpolation of a daily revenue series — the backfill /
     sensor-dropout primitive: days with ``day % 3 = 0`` are treated as
@@ -1051,7 +1036,6 @@ SIM_HAMMING_TOPK_ORACLE = (
 )
 
 
-@register("sim_hamming_topk", oracle=SIM_HAMMING_TOPK_ORACLE, tier="B")
 def sim_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming-distance top-k over binary sign fingerprints: each embedding
     collapses to its 64 sign bits packed into two 32-bit words, and nearest
@@ -1121,7 +1105,6 @@ JOIN_BLOOM_ORACLE = (
 )
 
 
-@register("join_bloom", oracle=JOIN_BLOOM_ORACLE, tier="C")
 def join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi join accelerated by a DECLARATIVE distributed bloom filter —
     Spark's runtime-filter / BloomFilterAggregate pattern rebuilt from
@@ -1223,7 +1206,6 @@ GEO_RADIUS_JOIN_ORACLE = (
 )
 
 
-@register("geo_radius_join", oracle=GEO_RADIUS_JOIN_ORACLE, tier="C")
 def geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All point pairs within 500 km — the spatial self-join that must NOT
     go quadratic: points land in a 5°×10° grid (cell spans ≥ the radius in
@@ -1376,7 +1358,6 @@ EVENT_AB_BAYES_ORACLE = (
 )
 
 
-@register("event_ab_bayes", oracle=EVENT_AB_BAYES_ORACLE, tier="C")
 def event_ab_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT Bayesian A/B read-out under Beta(1,1)-Bernoulli conjugacy:
     posterior Beta(1+k, 1+n−k) per arm and the CLOSED-FORM probability the
@@ -1530,7 +1511,6 @@ STAT_BINOM_FDR_ORACLE = (
 )
 
 
-@register("stat_binom_fdr", oracle=STAT_BINOM_FDR_ORACLE, tier="C")
 def stat_binom_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group EXACT binomial upper-tail p-values with Benjamini–Hochberg
     FDR control: does any event type's rate of high-value events exceed the

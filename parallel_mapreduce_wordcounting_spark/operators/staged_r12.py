@@ -1,9 +1,9 @@
-"""Robust-statistics / data-quality / format-fidelity wave — REGISTERED in
-round 8 (scripts/register_staged.py). Originally STAGED behind
-``staged_r10`` and ``staged_r11`` in the verification-window queue
-(implemented + oracle-tested now, deliberately NOT ``@register``-ed;
-COVERAGE.md "verification budget"). tests/test_staged_r12.py runs the same
-fn-vs-DuckDB compare the registry harness would, at sf0.001 AND sf0.01.
+"""Robust-statistics / data-quality / format-fidelity wave (registered
+since round 8). Like every ``staged_r*`` module with ``DEV_CASES``, it
+registers itself on import: the package root registers each
+``(key, fn, oracle)`` entry. tests/test_oracle_parity.py runs the
+fn-vs-DuckDB compare; tests/test_staged_r12.py holds the independent
+property checks.
 
 Contents:
 
@@ -43,7 +43,6 @@ from pyspark.sql import types as T
 
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
-from ..registry import register
 
 _D38 = "decimal(38,0)"
 
@@ -81,7 +80,6 @@ STAT_JARQUE_BERA_ORACLE = (
 )
 
 
-@register("stat_jarque_bera", oracle=STAT_JARQUE_BERA_ORACLE, tier="C")
 def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jarque–Bera normality statistic per event type: JB = n/6·(g₁² +
     g₂²/4) over sample skewness g₁ and excess kurtosis g₂ — the standard
@@ -147,7 +145,6 @@ STAT_THEIL_SEN_ORACLE = (
 )
 
 
-@register("stat_theil_sen", oracle=STAT_THEIL_SEN_ORACLE, tier="C")
 def stat_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil–Sen robust trend slope of daily revenue per event type: the
     MEDIAN of all pairwise slopes (yⱼ−yᵢ)/(dⱼ−dᵢ) over day pairs — the
@@ -221,7 +218,6 @@ DQ_ANOMALY_IQR_ORACLE = (
 )
 
 
-@register("dq_anomaly_iqr", oracle=DQ_ANOMALY_IQR_ORACLE, tier="B")
 def dq_anomaly_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tukey-fence outlier census per event type: values beyond
     [q1 − 1.5·IQR, q3 + 1.5·IQR] of the exact interpolated quartiles —
@@ -289,7 +285,6 @@ SAMPLE_BALANCED_ORACLE = (
 )
 
 
-@register("sample_balanced", oracle=SAMPLE_BALANCED_ORACLE, tier="B")
 def sample_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Class-balanced downsampling: at most k rows PER CLASS, selected by
     md5 bottom-k within each class — the deterministic fix for class
@@ -357,7 +352,6 @@ EVENT_UPLIFT_QINI_ORACLE = (
 )
 
 
-@register("event_uplift_qini", oracle=EVENT_UPLIFT_QINI_ORACLE, tier="C")
 def event_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decile uplift / Qini curve: rank users by a pre-intervention
     targeting score, split into deciles, and per decile report
@@ -470,7 +464,6 @@ def _stage_dir(prefix: str, sf_dir: str) -> str:
     )
 
 
-@register("sink_csv_roundtrip", oracle=SINK_CSV_ROUNDTRIP_ORACLE, tier="C")
 def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV sink + scan round trip over the FULL documents table (free-text
     column included): write with header + RFC-style quoting, read back with
@@ -491,7 +484,6 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema(_DOCS_SCHEMA).option("header", "true").csv(out)
 
 
-@register("sink_jsonl_roundtrip", oracle=SINK_JSONL_ROUNDTRIP_ORACLE, tier="C")
 def sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink + scan round trip over the full documents table —
     the scan_jsonl ingest path exercised in REVERSE with an explicit

@@ -1,9 +1,8 @@
-"""Correlation / randomness / feature-engineering wave — REGISTERED in
-round 8 (scripts/register_staged.py). Originally STAGED behind
-``staged_r10``–``r12`` in the verification-window queue (implemented +
-oracle-tested now, deliberately NOT ``@register``-ed; COVERAGE.md
-"verification budget"). tests/test_staged_r13.py runs the same
-fn-vs-DuckDB compare the registry harness would, at sf0.001 AND sf0.01.
+"""Correlation / randomness / feature-engineering wave (registered since
+round 8). Like every ``staged_r*`` module with ``DEV_CASES``, it registers
+itself on import: the package root registers each ``(key, fn, oracle)``
+entry. tests/test_oracle_parity.py runs the fn-vs-DuckDB compare;
+tests/test_staged_r13.py holds the independent property checks.
 
 Contents:
 
@@ -42,7 +41,6 @@ from pyspark.sql import functions as F
 
 from ..sources.loader import load_table, ts_day, ts_us
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
-from ..registry import register
 
 _D38 = "decimal(38,0)"
 
@@ -76,7 +74,6 @@ STAT_SPEARMAN_ORACLE = (
 )
 
 
-@register("stat_spearman", oracle=STAT_SPEARMAN_ORACLE, tier="C")
 def stat_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation between daily click volume and daily
     purchase revenue — "does engagement predict spend?" measured on RANKS,
@@ -169,7 +166,6 @@ STAT_RUNS_TEST_ORACLE = (
 )
 
 
-@register("stat_runs_test", oracle=STAT_RUNS_TEST_ORACLE, tier="C")
 def stat_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald–Wolfowitz runs test per event type: is the daily-revenue
     above/below-median sequence random? Too FEW runs ⇒ trend/regime
@@ -267,7 +263,6 @@ STAT_EFFECT_SIZE_ORACLE = (
 )
 
 
-@register("stat_effect_size", oracle=STAT_EFFECT_SIZE_ORACLE, tier="C")
 def stat_effect_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Standardized effect sizes between two event populations: Cohen's d
     (pooled SD), Hedges' g (small-sample bias correction 1 − 3/(4N−9)),
@@ -361,7 +356,6 @@ DQ_BENFORD_ORACLE = (
 )
 
 
-@register("dq_benford", oracle=DQ_BENFORD_ORACLE, tier="B")
 def dq_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-significant-digit census against Benford's law with the χ²
     deviation — the classic screen for fabricated, unit-mixed, or
@@ -424,7 +418,6 @@ EVENT_LAG_FEATURES_ORACLE = (
 )
 
 
-@register("event_lag_features", oracle=EVENT_LAG_FEATURES_ORACLE, tier="C")
 def event_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The lag/rolling feature frame a forecasting or anomaly model trains
     on: per (type, day) — the value, lag-1, lag-7 (same weekday), percent
@@ -471,7 +464,6 @@ SCAN_TEXT_GZIP_ORACLE = (
 )
 
 
-@register("scan_text_gzip", oracle=SCAN_TEXT_GZIP_ORACLE, tier="B")
 def scan_text_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gzip-compressed text ingest round trip: frame each document as a
     ``doc_id\\ttext`` line, write with the gzip codec, re-read through the
@@ -528,7 +520,6 @@ JOIN_ASOF_NEAREST_ORACLE = (
 )
 
 
-@register("join_asof_nearest", oracle=JOIN_ASOF_NEAREST_ORACLE, tier="C")
 def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-in-time join: for each event, the user's order CLOSEST in
     absolute time — the bidirectional sibling of join_asof's

@@ -1,8 +1,8 @@
-"""Iterative-algorithm wave, STAGED behind ``staged_r10``–``r21`` in the
-verification-window queue (implemented + oracle-tested now, deliberately
-NOT ``@register``-ed; COVERAGE.md "verification budget").
-tests/test_staged_r22.py runs the same fn-vs-DuckDB compare the registry
-harness would, at sf0.001 AND sf0.01.
+"""Iterative-algorithm wave. Like every ``staged_r*`` module with
+``DEV_CASES``, it registers itself on import: the package root registers
+each ``(key, fn, oracle)`` entry. tests/test_oracle_parity.py runs the
+fn-vs-DuckDB compare; tests/test_staged_r22.py holds the independent
+property checks.
 
 Contents — driver-bounded iteration over distributed scans, every loop
 unrolled (or made recursive) in the DuckDB oracle:
@@ -603,22 +603,3 @@ DEV_CASES = [
     ("stat_mixture_em", stat_mixture_em, STAT_MIXTURE_EM_ORACLE),
     ("pipeline_active_learning", pipeline_active_learning, PIPELINE_ACTIVE_ORACLE),
 ]
-
-
-# -- wave registration (appended by scripts/register_staged.py) --
-from ..registry import B_PREFIXES as _B_PREFIXES
-from ..registry import REGISTRY as _REGISTRY
-from ..registry import register as _register
-
-for _case in DEV_CASES:
-    # defensive unpack: preflight_staged tolerates len(case) > 3 variance,
-    # so the promoted block must too — a strict 3-tuple unpack would raise
-    # ValueError at package import for any future 4-element entry
-    _key, _fn, _oracle = _case[0], _case[1], (_case[2] if len(_case) > 2 else None)
-    if _key not in _REGISTRY:  # idempotent under re-import / re-promotion
-        _register(
-            _key,
-            oracle=_oracle,
-            tier="B" if _key.startswith(_B_PREFIXES) else "C",
-        )(_fn)
-del _B_PREFIXES, _REGISTRY, _register

@@ -16,7 +16,7 @@ value-hash), so:
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -24,13 +24,10 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 REGISTRY: dict[str, "QuerySpec"] = {}
 
-# Tier convention for wave-promoted keys (display metadata only): LLM-
+# Tier convention for staged-wave keys (display metadata only): LLM-
 # pipeline-ish prefixes are tier B, relational/statistical/eventing are
-# tier C. SINGLE source of truth — the registration blocks appended by
-# scripts/register_staged.py import this rather than inlining the tuple,
-# so a future prefix addition reclassifies every promoted wave at once
-# (r9 ADVICE: 8 modules carried verbatim copies that a template edit
-# would have left stale).
+# tier C. The package root's DEV_CASES registration loop reads this tuple,
+# so a prefix addition reclassifies every staged wave at once.
 B_PREFIXES = (
     "sim_",
     "dedup_",
@@ -50,21 +47,17 @@ class QuerySpec:
     fn: QueryFn
     oracle: str | None  # DuckDB SQL, or None -> driver's rows-only check
     tier: str = "C"  # A = reference word-count surface, B = LLM-pipeline, C = relational/stream
-    tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 def register(
-    key: str,
-    oracle: str | None = None,
-    tier: str = "C",
-    tags: tuple[str, ...] = (),
+    key: str, oracle: str | None = None, tier: str = "C"
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register ``fn`` as the implementation of operator ``key``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if key in REGISTRY:
             raise ValueError(f"duplicate operator key: {key}")
-        REGISTRY[key] = QuerySpec(key=key, fn=fn, oracle=oracle, tier=tier, tags=tags)
+        REGISTRY[key] = QuerySpec(key=key, fn=fn, oracle=oracle, tier=tier)
         return fn
 
     return deco
@@ -142,14 +135,11 @@ REVERIFY_MIN_ROUNDS: dict[str, int] = {
     # (dedup_ngram_jaccard's stamp advanced to 13 below — its fresh r10
     # verdict landed, then the r13 engine checkpoint re-floated it.)
     "sim_sparse_cosine": 10,
-    # r11: gained the ONE-SIDED AllPairs prefix filter (the r10 verdict's
-    # flagged hub quadratic — prefix(smaller) ⋈ full(larger) replaces the
-    # unfiltered postings self-join; output bitwise unchanged, parity
-    # re-tested at sf0.001/0.01 and hub pruning pinned in
-    # tests/test_round11.py), but the newest hash verdict attests the
-    # unfiltered plan. Alphabetical tier-1 order puts this ahead of
-    # sim_sparse_cosine, whose reverify slides to a round-12 spare slot.
-    "dedup_containment": 11,
+    # (dedup_containment's r11 stamp was superseded by its r14 oracle-
+    # rewrite stamp below — the r11 entry's rationale: it gained the
+    # ONE-SIDED AllPairs prefix filter, prefix(smaller) ⋈ full(larger) in
+    # place of the unfiltered postings self-join; output bitwise unchanged,
+    # hub pruning pinned in tests/test_round11.py.)
     # r12: the r11 ADVICE pair landed — the P6 decode branch validates
     # instead of raising on malformed 'P6\n' payloads, and the DuckDB
     # oracle now MIRRORS the magic-byte dispatch (same strict dims

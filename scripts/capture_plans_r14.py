@@ -8,7 +8,8 @@ Writes plans/r14/<key>_<tag>.txt for every key named on the command line
 Config mirrors bench.py (local[$SPARK_GRAFT_CPUS], 32 shuffle partitions,
 AQE on) so the captured initial plans match what the bench executes.
 
-Round-14 fixes over capture_plans_r13.py (r13 VERDICT item 7 + ADVICE):
+Round-14 fixes over the round-13 capture script it replaces (r13 VERDICT
+item 7 + ADVICE):
 - a sweep with ANY failed explain exits 1 (after still writing every
   file), so a half-failed artifact set cannot read as success in CI;
 - driver-composed/iterative keys (whose registered frame is an

@@ -16,6 +16,7 @@ from __future__ import annotations
 import pytest
 
 import parallel_mapreduce_wordcounting_spark as engine
+from parallel_mapreduce_wordcounting_spark.operators import staged_modules
 
 # every op fixed by the round-7 sweep + one representative per family
 KEYS = [
@@ -95,403 +96,19 @@ def test_staged_ops_survive_degenerate_corpus(spark, degenerate_sf, name):
     getattr(staged_r10, name)(spark, degenerate_sf).collect()  # must not raise
 
 
-def _staged_r11_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r11
-
-    return [c[0] for c in staged_r11.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r11_names())
-def test_staged_r11_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r11
-
-    getattr(staged_r11, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r12_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r12
-
-    return [c[0] for c in staged_r12.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r12_names())
-def test_staged_r12_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r12
-
-    getattr(staged_r12, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r13_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r13
-
-    return [c[0] for c in staged_r13.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r13_names())
-def test_staged_r13_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r13
-
-    getattr(staged_r13, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r14_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r14
-
-    return [c[0] for c in staged_r14.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r14_names())
-def test_staged_r14_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r14
-
-    getattr(staged_r14, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r15_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r15
-
-    return [c[0] for c in staged_r15.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r15_names())
-def test_staged_r15_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r15
-
-    getattr(staged_r15, name)(spark, degenerate_sf).collect()  # must not raise
-
-def _staged_r16_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r16
-
-    return [c[0] for c in staged_r16.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r16_names())
-def test_staged_r16_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r16
-
-    getattr(staged_r16, name)(spark, degenerate_sf).collect()  # must not raise
-
-def _staged_r17_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r17
-
-    return [c[0] for c in staged_r17.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r17_names())
-def test_staged_r17_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r17
-
-    getattr(staged_r17, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-
-def _staged_r18_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r18
-
-    return [c[0] for c in staged_r18.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r18_names())
-def test_staged_r18_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r18
-
-    getattr(staged_r18, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r19_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r19
-
-    return [c[0] for c in staged_r19.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r19_names())
-def test_staged_r19_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r19
-
-    getattr(staged_r19, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r20_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r20
-
-    return [c[0] for c in staged_r20.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r20_names())
-def test_staged_r20_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r20
-
-    getattr(staged_r20, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r21_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r21
-
-    return [c[0] for c in staged_r21.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r21_names())
-def test_staged_r21_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r21
-
-    getattr(staged_r21, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r22_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r22
-
-    return [c[0] for c in staged_r22.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r22_names())
-def test_staged_r22_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r22
-
-    getattr(staged_r22, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r23_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r23
-
-    return [c[0] for c in staged_r23.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r23_names())
-def test_staged_r23_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r23
-
-    getattr(staged_r23, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r24_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r24
-
-    return [c[0] for c in staged_r24.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r24_names())
-def test_staged_r24_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r24
-
-    getattr(staged_r24, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r25_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r25
-
-    return [c[0] for c in staged_r25.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r25_names())
-def test_staged_r25_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r25
-
-    getattr(staged_r25, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r26_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r26
-
-    return [c[0] for c in staged_r26.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r26_names())
-def test_staged_r26_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r26
-
-    getattr(staged_r26, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r27_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r27
-
-    return [c[0] for c in staged_r27.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r27_names())
-def test_staged_r27_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r27
-
-    getattr(staged_r27, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r28_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r28
-
-    return [c[0] for c in staged_r28.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r28_names())
-def test_staged_r28_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r28
-
-    getattr(staged_r28, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r29_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r29
-
-    return [c[0] for c in staged_r29.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r29_names())
-def test_staged_r29_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r29
-
-    getattr(staged_r29, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r30_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r30
-
-    return [c[0] for c in staged_r30.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r30_names())
-def test_staged_r30_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r30
-
-    getattr(staged_r30, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r31_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r31
-
-    return [c[0] for c in staged_r31.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r31_names())
-def test_staged_r31_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r31
-
-    getattr(staged_r31, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r32_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r32
-
-    return [c[0] for c in staged_r32.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r32_names())
-def test_staged_r32_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r32
-
-    getattr(staged_r32, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r33_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r33
-
-    return [c[0] for c in staged_r33.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r33_names())
-def test_staged_r33_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r33
-
-    getattr(staged_r33, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r34_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r34
-
-    return [c[0] for c in staged_r34.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r34_names())
-def test_staged_r34_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r34
-
-    getattr(staged_r34, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r35_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r35
-
-    return [c[0] for c in staged_r35.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r35_names())
-def test_staged_r35_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r35
-
-    getattr(staged_r35, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r36_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r36
-
-    return [c[0] for c in staged_r36.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r36_names())
-def test_staged_r36_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r36
-
-    getattr(staged_r36, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r37_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r37
-
-    return [c[0] for c in staged_r37.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r37_names())
-def test_staged_r37_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r37
-
-    getattr(staged_r37, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r38_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r38
-
-    return [c[0] for c in staged_r38.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r38_names())
-def test_staged_r38_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r38
-
-    getattr(staged_r38, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r39_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r39
-
-    return [c[0] for c in staged_r39.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r39_names())
-def test_staged_r39_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r39
-
-    getattr(staged_r39, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r40_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r40
-
-    return [c[0] for c in staged_r40.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r40_names())
-def test_staged_r40_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r40
-
-    getattr(staged_r40, name)(spark, degenerate_sf).collect()  # must not raise
-
-
-def _staged_r41_names():
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r41
-
-    return [c[0] for c in staged_r41.DEV_CASES]
-
-
-@pytest.mark.parametrize("name", _staged_r41_names())
-def test_staged_r41_survive_degenerate_corpus(spark, degenerate_sf, name):
-    from parallel_mapreduce_wordcounting_spark.operators import staged_r41
-
-    getattr(staged_r41, name)(spark, degenerate_sf).collect()  # must not raise
+def _wave_survives_degenerate_corpus(mod):
+    @pytest.mark.parametrize("name", [c[0] for c in mod.DEV_CASES])
+    def test(spark, degenerate_sf, name):
+        getattr(mod, name)(spark, degenerate_sf).collect()  # must not raise
+
+    return test
+
+
+# One test per wave r11–r41, parametrized over the wave's DEV_CASES names;
+# a per-wave function name keeps each case's test ID stable.
+for _mod in staged_modules():
+    _wave = _mod.__name__.rsplit(".", 1)[1]
+    if 11 <= int(_wave.removeprefix("staged_r")) <= 41:
+        globals()[f"test_{_wave}_survive_degenerate_corpus"] = (
+            _wave_survives_degenerate_corpus(_mod)
+        )

@@ -203,3 +203,25 @@ def test_oracle_sql_keys_subset_of_queries():
     o = oracle_sql()
     assert set(o) <= set(q)
     assert all(isinstance(s, str) and s.strip() for s in o.values())
+
+
+def test_reverify_literal_has_no_repeated_key():
+    # A dict literal keeps the LAST value of a repeated key, so a stale
+    # stamp can hide behind a newer one without any runtime trace; only
+    # the source shows the repeat.
+    import ast
+    from pathlib import Path
+
+    from parallel_mapreduce_wordcounting_spark import registry
+
+    tree = ast.parse(Path(registry.__file__).read_text())
+    (literal,) = [
+        node.value
+        for node in ast.walk(tree)
+        if isinstance(node, ast.AnnAssign)
+        and isinstance(node.target, ast.Name)
+        and node.target.id == "REVERIFY_MIN_ROUNDS"
+    ]
+    keys = [k.value for k in literal.keys]
+    repeated = sorted({k for k in keys if keys.count(k) > 1})
+    assert not repeated, f"REVERIFY_MIN_ROUNDS repeats {repeated}"

@@ -269,110 +269,21 @@ def test_lsh_census_eval_slice_bounds_cost(spark, monkeypatch):
     assert tuple(full) == tuple(row)  # deterministic slice -> identical census
 
 
-def _load_register_staged():
-    import importlib.util
-    from pathlib import Path
+def test_every_dev_case_is_registered_as_declared():
+    """The package root registers each staged wave from its DEV_CASES:
+    every entry must land in REGISTRY with the same fn object, the same
+    oracle and the prefix-derived tier, and the rows-only
+    text_compression_ratio must stay rows-only."""
+    from parallel_mapreduce_wordcounting_spark.operators import staged_modules
+    from parallel_mapreduce_wordcounting_spark.registry import B_PREFIXES, REGISTRY
 
-    spec = importlib.util.spec_from_file_location(
-        "register_staged",
-        Path(__file__).resolve().parents[1] / "scripts" / "register_staged.py",
-    )
-    tool = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(tool)
-    return tool
-
-
-def test_register_staged_promotes_every_dev_case(tmp_path, monkeypatch):
-    """r8 review: the decorator-inserting promotion tool keyed on
-    mechanical NAME_ORACLE constants, which the r14+ waves break 16 times
-    (non-mechanical names like STAT_HILL_ORACLE, rows-only ops with no
-    constant, and text_bleu's constant assigned BELOW its def — a
-    NameError decorator). The tool now appends a block looping over
-    DEV_CASES, so promotion registers exactly the tested surface.
-    End-to-end: promote a COPY of staged_r23, import it, and check all
-    five keys (incl. the rows-only text_compression_ratio) land in a
-    scratch registry."""
-    import shutil
-    from pathlib import Path
-
-    tool = _load_register_staged()
-    ops_src = (
-        Path(__file__).resolve().parents[1]
-        / "parallel_mapreduce_wordcounting_spark"
-        / "operators"
-    )
-    work = tmp_path / "operators"
-    work.mkdir()
-    # staged_r23 was PROMOTED for real in round 10 — strip the appended
-    # block from the copy so the tool sees the pre-promotion module the
-    # test has always exercised
-    pre = (ops_src / "staged_r23.py").read_text().split(tool.MARKER)[0].rstrip() + "\n"
-    (work / "staged_r23.py").write_text(pre)
-    # stub package root for the import-wiring half of promotion
-    init = tmp_path / "__init__.py"
-    init.write_text(
-        "from .operators import (\n    staged_r8,\n    staged_r13,\n)\n"
-    )
-    monkeypatch.setattr(tool, "OPS", work)
-
-    assert tool.promote("staged_r23") == 5  # every DEV_CASES op, none skipped
-    out = (work / "staged_r23.py").read_text()
-    assert tool.MARKER in out
-    assert "\n    staged_r23,\n)" in init.read_text()  # wired into the root
-    # idempotent: a second run adds nothing anywhere
-    assert tool.promote("staged_r23") == 0
-    assert out.count(tool.MARKER) == 1
-    assert init.read_text().count("staged_r23") == 1
-
-    # the appended block must IMPORT cleanly and register all five keys;
-    # exec the promoted source with stub relative imports + a scratch
-    # registry so the real REGISTRY is untouched
-    import parallel_mapreduce_wordcounting_spark.operators.staged_r23 as real
-
-    scratch: dict = {}
-
-    def fake_register(key, oracle=None, tier="C", tags=()):
-        def deco(fn):
-            assert key not in scratch
-            scratch[key] = (oracle, tier)
-            return fn
-
-        return deco
-
-    ns = dict(real.__dict__)  # defs already bound; re-exec only the block
-    ns["DEV_CASES"] = real.DEV_CASES
-    block = out.split(tool.MARKER, 1)[1]
-    block = "\n".join(
-        line
-        for line in block.splitlines()
-        if not line.startswith("from ..registry import")
-    )
-    ns["_REGISTRY"] = {}
-    ns["_register"] = fake_register
-    from parallel_mapreduce_wordcounting_spark.registry import B_PREFIXES
-
-    ns["_B_PREFIXES"] = B_PREFIXES
-    exec(block, ns)
-    assert set(scratch) == {
-        "sim_dbscan",
-        "stat_hill_tail",
-        "stat_kde_grid",
-        "dq_mahalanobis",
-        "text_compression_ratio",
-    }
-    assert scratch["text_compression_ratio"] == (None, "B")  # rows-only kept
-    assert scratch["stat_hill_tail"][0] is real.STAT_HILL_ORACLE  # non-mechanical name
-    assert scratch["dq_mahalanobis"][1] == "B" and scratch["stat_kde_grid"][1] == "C"
-
-
-def test_register_staged_block_registers_for_real(tmp_path, monkeypatch):
-    """The appended block must also work under a REAL import: promote a
-    minimal synthetic wave module into a scratch package that reuses the
-    real registry machinery via sys.modules aliasing is overkill — instead
-    assert the block's text matches the registry.register signature (key,
-    oracle, tier) and guards on REGISTRY membership (idempotent under
-    re-import)."""
-    tool = _load_register_staged()
-    assert "if _key not in _REGISTRY" in tool.BLOCK
-    assert "oracle=_oracle" in tool.BLOCK
-    assert 'tier="B" if _key.startswith' in tool.BLOCK
+    seen = []
+    for mod in staged_modules():
+        for key, fn, oracle in getattr(mod, "DEV_CASES", ()):
+            spec = REGISTRY[key]
+            assert spec.fn is fn, key
+            assert spec.oracle == oracle, key
+            assert spec.tier == ("B" if key.startswith(B_PREFIXES) else "C"), key
+            seen.append(key)
+    assert len(seen) == len(set(seen))
+    assert REGISTRY["text_compression_ratio"].oracle is None

@@ -1,9 +1,6 @@
-"""Round-10 staged operators (operators/staged_r10.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget; the round-7 window closed at 50/50).
-Cross-scale coverage: the driver-shaped compare also ran at sf0.01 during
-development (PMRWC_TEST_SF_DIR overrides conftest.SF_DIR for a full re-run)."""
+"""Round-10 staged operators (operators/staged_r10.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express."""
 
 from __future__ import annotations
 
@@ -11,51 +8,32 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r10
 
-from .conftest import SF_DIR, compare_frames
+from .conftest import (
+    SF_DIR,
+    assert_nonvacuous,
+    compare_frames,
+    run_compare,
+    wave_keys,
+)
 
-CASES = [
-    (
-        "sim_sparse_cosine",
-        staged_r10.sim_sparse_cosine,
-        staged_r10.SIM_SPARSE_COSINE_ORACLE,
-    ),
-    (
-        "text_ngram_novelty",
-        staged_r10.text_ngram_novelty,
-        staged_r10.TEXT_NGRAM_NOVELTY_ORACLE,
-    ),
-    ("stat_auc", staged_r10.stat_auc, staged_r10.STAT_AUC_ORACLE),
-    ("stat_psi", staged_r10.stat_psi, staged_r10.STAT_PSI_ORACLE),
-    ("event_survival", staged_r10.event_survival, staged_r10.EVENT_SURVIVAL_ORACLE),
-    ("event_ab_cuped", staged_r10.event_ab_cuped, staged_r10.EVENT_AB_CUPED_ORACLE),
-    (
-        "stat_bootstrap_ci",
-        staged_r10.stat_bootstrap_ci,
-        staged_r10.STAT_BOOTSTRAP_CI_ORACLE,
-    ),
-    ("scan_file_stats", staged_r10.scan_file_stats, staged_r10.SCAN_FILE_STATS_ORACLE),
-    ("mm_png_meta", staged_r10.mm_png_meta, staged_r10.MM_PNG_META_ORACLE),
-    (
-        "text_readability",
-        staged_r10.text_readability,
-        staged_r10.TEXT_READABILITY_ORACLE,
-    ),
+W2_KEYS = [
+    "text_bpe_train",
+    "stat_calibration",
+    "graph_degree_stats",
+    "mm_wav_meta",
+    "event_power_analysis",
 ]
+W3_KEYS = ["text_langid_eval", "dedup_eval_simhash", "scd2_snapshot_diff"]
+W1_KEYS = [k for k in wave_keys(staged_r10) if k not in W2_KEYS + W3_KEYS]
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r10_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", W1_KEYS)
+def test_staged_r10_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
-def test_staged_r10_nonvacuous(duck):
-    """Each staged op must return real rows on the fixture (a vacuously
-    empty result would pass parity while testing nothing)."""
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+def test_staged_r10_nonvacuous(spark, duck):
+    assert_nonvacuous(spark, duck, wave_keys(staged_r10))
 
 
 def test_auc_equals_pairwise_probability(spark, duck):
@@ -239,32 +217,10 @@ def test_readability_internal_identity(spark):
 
 # --- wave 2 --------------------------------------------------------------------
 
-CASES_W2 = [
-    ("text_bpe_train", staged_r10.text_bpe_train, staged_r10.TEXT_BPE_TRAIN_ORACLE),
-    (
-        "stat_calibration",
-        staged_r10.stat_calibration,
-        staged_r10.STAT_CALIBRATION_ORACLE,
-    ),
-    (
-        "graph_degree_stats",
-        staged_r10.graph_degree_stats,
-        staged_r10.GRAPH_DEGREE_STATS_ORACLE,
-    ),
-    ("mm_wav_meta", staged_r10.mm_wav_meta, staged_r10.MM_WAV_META_ORACLE),
-    (
-        "event_power_analysis",
-        staged_r10.event_power_analysis,
-        staged_r10.EVENT_POWER_ANALYSIS_ORACLE,
-    ),
-]
 
-
-@pytest.mark.parametrize("name,fn,oracle", CASES_W2, ids=[c[0] for c in CASES_W2])
-def test_staged_r10_w2_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", W2_KEYS)
+def test_staged_r10_w2_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_bpe_golden_merges(spark):
@@ -346,30 +302,10 @@ def test_power_analysis_formula_identity(spark):
 
 # --- wave 3 --------------------------------------------------------------------
 
-CASES_W3 = [
-    (
-        "text_langid_eval",
-        staged_r10.text_langid_eval,
-        staged_r10.TEXT_LANGID_EVAL_ORACLE,
-    ),
-    (
-        "dedup_eval_simhash",
-        staged_r10.dedup_eval_simhash,
-        staged_r10.DEDUP_EVAL_SIMHASH_ORACLE,
-    ),
-    (
-        "scd2_snapshot_diff",
-        staged_r10.scd2_snapshot_diff,
-        staged_r10.SCD2_SNAPSHOT_DIFF_ORACLE,
-    ),
-]
 
-
-@pytest.mark.parametrize("name,fn,oracle", CASES_W3, ids=[c[0] for c in CASES_W3])
-def test_staged_r10_w3_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", W3_KEYS)
+def test_staged_r10_w3_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_langid_eval_cells_sum_to_corpus(spark, duck):

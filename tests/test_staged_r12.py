@@ -1,9 +1,6 @@
-"""Round-12 staged operators (operators/staged_r12.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget; registration queued behind staged_r10 and
-staged_r11). Cross-scale coverage: the driver-shaped compare also ran at
-sf0.01 during development (PMRWC_TEST_SF_DIR overrides conftest.SF_DIR)."""
+"""Round-12 staged operators (operators/staged_r12.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express."""
 
 from __future__ import annotations
 
@@ -11,22 +8,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r12
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = staged_r12.DEV_CASES
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r12_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r12))
+def test_staged_r12_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
-def test_staged_r12_nonvacuous(duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+def test_staged_r12_nonvacuous(spark, duck):
+    assert_nonvacuous(spark, duck, wave_keys(staged_r12))
 
 
 def test_balanced_sample_actually_trims(duck):

@@ -1,11 +1,9 @@
-"""Round-17 staged operators (operators/staged_r17.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: npy headers are re-parsed with
-numpy itself; the winnow-eval recall is pinned to the theorem's 1.0;
-perplexity and Heaps checkpoints carry closed-form consistency checks."""
+"""Round-17 staged operators (operators/staged_r17.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+npy headers are re-parsed with numpy itself; the winnow-eval recall is
+pinned to the theorem's 1.0; perplexity and Heaps checkpoints carry closed-
+form consistency checks."""
 
 from __future__ import annotations
 
@@ -15,22 +13,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r17
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = staged_r17.DEV_CASES
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r17_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r17))
+def test_staged_r17_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
-def test_staged_r17_nonvacuous(duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+def test_staged_r17_nonvacuous(spark, duck):
+    assert_nonvacuous(spark, duck, wave_keys(staged_r17))
 
 
 def test_npy_headers_reparse_with_numpy(spark):

@@ -1,13 +1,10 @@
-"""Round-19 staged operators (operators/staged_r19.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: Wilson bounds against a plain-Python
-closed form, HHI against its algebraic identities, source overlap against
-Python set arithmetic on one pair, silhouette totals against the embeddings
-table, and the funnel against direct per-document recomputation.
-"""
+"""Round-19 staged operators (operators/staged_r19.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+Wilson bounds against a plain-Python closed form, HHI against its algebraic
+identities, source overlap against Python set arithmetic on one pair,
+silhouette totals against the embeddings table, and the funnel against
+direct per-document recomputation."""
 
 from __future__ import annotations
 
@@ -17,22 +14,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r19
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = staged_r19.DEV_CASES
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r19_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r19))
+def test_staged_r19_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
-def test_staged_r19_nonvacuous(duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+def test_staged_r19_nonvacuous(spark, duck):
+    assert_nonvacuous(spark, duck, wave_keys(staged_r19))
 
 
 def test_wilson_matches_python_closed_form(spark):

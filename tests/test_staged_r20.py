@@ -1,14 +1,11 @@
-"""Round-20 staged operators (operators/staged_r20.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: the Chapman estimate against the
-closed form and the exact truth count, Kendall against scipy-free Python
-pair counting, Neyman allocations against the budget, Delta's metric
-axioms, the tar index against the tarfile module's own member table, and
-local clustering against networkx-free Python triangle counting.
-"""
+"""Round-20 staged operators (operators/staged_r20.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the Chapman estimate against the closed form and the exact truth count,
+Kendall against scipy-free Python pair counting, Neyman allocations against
+the budget, Delta's metric axioms, the tar index against the tarfile
+module's own member table, and local clustering against networkx-free Python
+triangle counting."""
 
 from __future__ import annotations
 
@@ -18,22 +15,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r20
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = staged_r20.DEV_CASES
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r20_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r20))
+def test_staged_r20_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
-def test_staged_r20_nonvacuous(duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+def test_staged_r20_nonvacuous(spark, duck):
+    assert_nonvacuous(spark, duck, wave_keys(staged_r20))
 
 
 def test_capture_recapture_bounds(spark, duck):

@@ -1,15 +1,11 @@
-"""Round-23 staged operators (operators/staged_r23.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: a full Python DBSCAN replay over the
-brute-force pair set, the Hill estimator against sorted-order Python, KDE
-cells against a Python kernel sum with the same integer grid/bandwidth,
-Mahalanobis against numpy's covariance solve, and the compression ratio
-byte-for-byte against stdlib zlib (its rows-only substitute for an
-oracle).
-"""
+"""Round-23 staged operators (operators/staged_r23.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+a full Python DBSCAN replay over the brute-force pair set, the Hill
+estimator against sorted-order Python, KDE cells against a Python kernel sum
+with the same integer grid/bandwidth, Mahalanobis against numpy's covariance
+solve, and the compression ratio byte-for-byte against stdlib zlib (its
+rows-only substitute for an oracle)."""
 
 from __future__ import annotations
 
@@ -20,23 +16,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r23
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r23.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r23_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r23))
+def test_staged_r23_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r23_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
-    assert staged_r23.text_compression_ratio(spark, SF_DIR).count() > 0
+    assert_nonvacuous(spark, duck, wave_keys(staged_r23))
 
 
 def test_dbscan_python_replay(spark, duck):

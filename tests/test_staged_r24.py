@@ -1,15 +1,12 @@
-"""Round-24 staged operators (operators/staged_r24.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: the Hilbert key against a plain-Python
-xy2d replay plus the bijection/unit-step curve properties, PCA against
-numpy.linalg.eigh, Cook's distance against a numpy OLS-influence replica,
-the SPRT decision against a pure-Python sequential walk, the hashed
-embedding against a hashlib/md5 replica, and the seasonal decomposition
-against a Python moving-average replay plus the exact reconstruction
-identity."""
+"""Round-24 staged operators (operators/staged_r24.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the Hilbert key against a plain-Python xy2d replay plus the bijection/unit-
+step curve properties, PCA against numpy.linalg.eigh, Cook's distance
+against a numpy OLS-influence replica, the SPRT decision against a pure-
+Python sequential walk, the hashed embedding against a hashlib/md5 replica,
+and the seasonal decomposition against a Python moving-average replay plus
+the exact reconstruction identity."""
 
 from __future__ import annotations
 
@@ -21,22 +18,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r24
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r24.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r24_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r24))
+def test_staged_r24_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r24_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r24))
 
 
 def _hilbert_small(order, x, y):

@@ -1,15 +1,12 @@
-"""Round-25 staged operators (operators/staged_r25.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: the isotonic fit against a plain
-pool-adjacent-violators stack replay (monotonicity + level-set means), LPA
-against a Python synchronous-rounds replay over the brute-force edge set,
-the periodogram against a Python DFT with the identical integer centering,
-Bollinger bands against a Python rolling window, k-fold per-stratum balance
-(max−min ≤ 1), and the JPEG walk against Python struct re-parsing of the
-staged bytes."""
+"""Round-25 staged operators (operators/staged_r25.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the isotonic fit against a plain pool-adjacent-violators stack replay
+(monotonicity + level-set means), LPA against a Python synchronous-rounds
+replay over the brute-force edge set, the periodogram against a Python DFT
+with the identical integer centering, Bollinger bands against a Python
+rolling window, k-fold per-stratum balance (max−min ≤ 1), and the JPEG walk
+against Python struct re-parsing of the staged bytes."""
 
 from __future__ import annotations
 
@@ -20,22 +17,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r25
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r25.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r25_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r25))
+def test_staged_r25_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r25_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r25))
 
 
 def _pav(ns, cs):

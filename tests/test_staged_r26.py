@@ -1,16 +1,11 @@
-"""Round-26 staged operators (operators/staged_r26.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR; at sf0.01 the TOST verdict flips to 'equivalent', so both
-decision branches are exercised across the two scales). Independent guards:
+"""Round-26 staged operators (operators/staged_r26.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
 TOST against a Python z recomputation, the FD counts against brute-force
-Python dict counting, the rolling correlation against statistics-free
-Python sums, the seasonal anomaly gate against a replayed
-median/MAD screen, the txn-log snapshot against a sequential Python log
-walk over the staged JSONL bytes, and cross-lingual pairs against a
-brute-force numpy cosine sweep."""
+Python dict counting, the rolling correlation against statistics-free Python
+sums, the seasonal anomaly gate against a replayed median/MAD screen, the
+txn-log snapshot against a sequential Python log walk over the staged JSONL
+bytes, and cross-lingual pairs against a brute-force numpy cosine sweep."""
 
 from __future__ import annotations
 
@@ -21,22 +16,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r26
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r26.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r26_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r26))
+def test_staged_r26_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r26_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r26))
 
 
 def test_tost_python_z(spark, duck):

@@ -1,14 +1,11 @@
-"""Round-27 staged operators (operators/staged_r27.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: pivot↔unpivot structural round-trip
-properties (cell totals and long/wide consistency), the RANGE frame against
-a brute-force per-customer Python sweep (including a gap case the ROWS
-frame would get wrong), Shapley efficiency (Σφ = v(N) − v(∅)) plus a
-from-scratch Python permutation-average, and freshness against direct
-max-timestamp queries."""
+"""Round-27 staged operators (operators/staged_r27.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+pivot↔unpivot structural round-trip properties (cell totals and long/wide
+consistency), the RANGE frame against a brute-force per-customer Python
+sweep (including a gap case the ROWS frame would get wrong), Shapley
+efficiency (Σφ = v(N) − v(∅)) plus a from-scratch Python permutation-
+average, and freshness against direct max-timestamp queries."""
 
 from __future__ import annotations
 
@@ -19,22 +16,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r27
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r27.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r27_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r27))
+def test_staged_r27_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r27_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r27))
 
 
 def test_pivot_cells_sum_to_corpus(spark, duck):

@@ -1,14 +1,11 @@
-"""Round-28 staged operators (operators/staged_r28.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: modularity against a from-scratch
-Python Q over the brute-force edge set + LPA replay, Wilcoxon against a
-plain sorted-midranks recomputation, mode against dict counting, the
-co-purchase projection against per-order pair enumeration, and lifecycle
-counts against a sequential per-user replay plus the two growth-accounting
-reconciliation identities."""
+"""Round-28 staged operators (operators/staged_r28.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+modularity against a from-scratch Python Q over the brute-force edge set +
+LPA replay, Wilcoxon against a plain sorted-midranks recomputation, mode
+against dict counting, the co-purchase projection against per-order pair
+enumeration, and lifecycle counts against a sequential per-user replay plus
+the two growth-accounting reconciliation identities."""
 
 from __future__ import annotations
 
@@ -18,22 +15,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r28
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r28.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r28_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r28))
+def test_staged_r28_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r28_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r28))
 
 
 def _lpa_python(duck):

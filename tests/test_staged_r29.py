@@ -1,14 +1,11 @@
-"""Round-29 staged operators (operators/staged_r29.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: the CSV quarantine against a direct
-re-read of the staged bytes, Cochran–Armitage against a from-scratch
-Python T/Var, assortativity against numpy.corrcoef over the edge-endpoint
-degree lists, the window sweep against a per-signup Python scan (plus the
-monotonicity property), and the inet round-trip against Python's own
-inet_ntoa/aton pair."""
+"""Round-29 staged operators (operators/staged_r29.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the CSV quarantine against a direct re-read of the staged bytes,
+Cochran–Armitage against a from-scratch Python T/Var, assortativity against
+numpy.corrcoef over the edge-endpoint degree lists, the window sweep against
+a per-signup Python scan (plus the monotonicity property), and the inet
+round-trip against Python's own inet_ntoa/aton pair."""
 
 from __future__ import annotations
 
@@ -19,22 +16,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r29
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r29.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r29_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r29))
+def test_staged_r29_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r29_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r29))
 
 
 def test_csv_quarantine_reread_staged_bytes(spark, duck):

@@ -1,14 +1,12 @@
-"""Round-31 staged operators (operators/staged_r31.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: the model fits against from-scratch
-Python MLEs (plus the likelihood-dominance sanity that the winner's ll is a
-true max of the three), code detection against Python character counting,
-the MP4 walk against struct re-parsing of the staged bytes, WoW change
-against a dict lookup 7 days back, and the intraday profile against
-Python µs bucketing plus the share-sums-to-one identity."""
+"""Round-31 staged operators (operators/staged_r31.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the model fits against from-scratch Python MLEs (plus the likelihood-
+dominance sanity that the winner's ll is a true max of the three), code
+detection against Python character counting, the MP4 walk against struct re-
+parsing of the staged bytes, WoW change against a dict lookup 7 days back,
+and the intraday profile against Python µs bucketing plus the share-sums-to-
+one identity."""
 
 from __future__ import annotations
 
@@ -19,22 +17,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r31
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r31.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r31_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r31))
+def test_staged_r31_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r31_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r31))
 
 
 def test_fit_compare_python_mle(spark, duck):

@@ -1,16 +1,13 @@
-"""Round-32 staged operators (operators/staged_r32.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: the EWMA chart against a plain Python
-recursion with the textbook limit formula (pow-based, vs the op's carried
-variance state — they must agree to float tolerance), the source template
-against Python os.path.commonprefix over ALL texts of a group, null-safe
-join counts against dict counting (with the NULL bucket asserted
-non-empty), shrinkage against the pooled/raw ordering properties every
-shrinker must satisfy, and the catalog snapshot against pyarrow's own view
-of the parquet schemas."""
+"""Round-32 staged operators (operators/staged_r32.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the EWMA chart against a plain Python recursion with the textbook limit
+formula (pow-based, vs the op's carried variance state — they must agree to
+float tolerance), the source template against Python os.path.commonprefix
+over ALL texts of a group, null-safe join counts against dict counting (with
+the NULL bucket asserted non-empty), shrinkage against the pooled/raw
+ordering properties every shrinker must satisfy, and the catalog snapshot
+against pyarrow's own view of the parquet schemas."""
 
 from __future__ import annotations
 
@@ -22,22 +19,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r32
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r32.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r32_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r32))
+def test_staged_r32_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r32_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r32))
 
 
 def test_ewma_python_textbook(spark, duck):

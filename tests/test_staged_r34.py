@@ -1,14 +1,11 @@
-"""Round-34 staged operators (operators/staged_r34.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: the paired t against statistics-module
-math (and the t↔Wilcoxon same-sign sanity), the lag histogram against a
-per-signup Python scan (with the shares-sum-to-one identity), the norm
-check against numpy norms, the nested-JSON aggregate against re-reading the
-staged JSONL with the json module, and the drawdown against a sequential
-running-peak walk."""
+"""Round-34 staged operators (operators/staged_r34.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the paired t against statistics-module math (and the t↔Wilcoxon same-sign
+sanity), the lag histogram against a per-signup Python scan (with the
+shares-sum-to-one identity), the norm check against numpy norms, the nested-
+JSON aggregate against re-reading the staged JSONL with the json module, and
+the drawdown against a sequential running-peak walk."""
 
 from __future__ import annotations
 
@@ -21,22 +18,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r34
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r34.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r34_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r34))
+def test_staged_r34_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r34_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r34))
 
 
 def _user_diffs(duck):

@@ -1,14 +1,12 @@
-"""Round-37 staged operators (operators/staged_r37.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: the AS-OF snapshot against a
-sequential log walk truncated at V (plus consistency with the full
-scan_txn_log head), join cardinality against dict counting (with the
-inner-join row-count prediction identity), partial correlation against
-numpy.corrcoef algebra, ABC against a sorted cumulative walk (plus the
-Pareto-shape sanity A_share ≥ 0.8·…), and Shannon against math.log."""
+"""Round-37 staged operators (operators/staged_r37.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the AS-OF snapshot against a sequential log walk truncated at V (plus
+consistency with the full scan_txn_log head), join cardinality against dict
+counting (with the inner-join row-count prediction identity), partial
+correlation against numpy.corrcoef algebra, ABC against a sorted cumulative
+walk (plus the Pareto-shape sanity A_share ≥ 0.8·…), and Shannon against
+math.log."""
 
 from __future__ import annotations
 
@@ -19,22 +17,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r37
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r37.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r37_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r37))
+def test_staged_r37_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r37_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r37))
 
 
 def test_asof_sequential_truncated_walk(spark, duck):

@@ -1,14 +1,11 @@
-"""Round-39 staged operators (operators/staged_r39.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Cross-scale coverage: the driver-shaped
-compare also ran at sf0.01 during development (PMRWC_TEST_SF_DIR overrides
-conftest.SF_DIR). Independent guards: the ratio pitfall against Python
-weighted math (with the divergence asserted nonzero somewhere — the pitfall
-is real on this corpus), MCC against sklearn-free formula algebra plus the
-trivial-rule comparison, id continuity against set arithmetic (with the
-expected lineitem non-contiguity), and base64 against Python's own codec
-with the length law."""
+"""Round-39 staged operators (operators/staged_r39.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the ratio pitfall against Python weighted math (with the divergence asserted
+nonzero somewhere — the pitfall is real on this corpus), MCC against
+sklearn-free formula algebra plus the trivial-rule comparison, id continuity
+against set arithmetic (with the expected lineitem non-contiguity), and
+base64 against Python's own codec with the length law."""
 
 from __future__ import annotations
 
@@ -20,22 +17,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r39
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r39.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r39_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r39))
+def test_staged_r39_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r39_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r39))
 
 
 def test_ratio_pitfall_python_weighted(spark, duck):

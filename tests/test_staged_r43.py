@@ -1,11 +1,10 @@
-"""Round-43 staged operators (operators/staged_r43.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Independent guards: the perceptual
-hashes against from-scratch Python byte arithmetic, the pairing against a
-Python brute-force hamming sweep (the recall-1.0 theorem — this exact
-check caught the 2-block pigeonhole bug during development), and CUSUM
-against a Python fold replay with the S ≥ 0 invariant."""
+"""Round-43 staged operators (operators/staged_r43.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the perceptual hashes against from-scratch Python byte arithmetic, the
+pairing against a Python brute-force hamming sweep (the recall-1.0 theorem —
+this exact check caught the 2-block pigeonhole bug during development), and
+CUSUM against a Python fold replay with the S ≥ 0 invariant."""
 
 from __future__ import annotations
 
@@ -16,22 +15,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r43
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r43.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r43_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r43))
+def test_staged_r43_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r43_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r43))
 
 
 def _py_ahash(payload: bytes, nb: int) -> int:

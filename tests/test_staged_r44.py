@@ -1,9 +1,8 @@
-"""Round-44 staged operators (operators/staged_r44.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Independent guards: Durbin–Watson
-against a float OLS replay, BFS against a plain Python adjacency walk,
-the ablation against per-doc Python filter flags, and the
+"""Round-44 staged operators (operators/staged_r44.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+Durbin–Watson against a float OLS replay, BFS against a plain Python
+adjacency walk, the ablation against per-doc Python filter flags, and the
 decontamination census against Python ``in``."""
 
 from __future__ import annotations
@@ -14,22 +13,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r44
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r44.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r44_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r44))
+def test_staged_r44_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r44_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r44))
 
 
 def test_durbin_watson_float_replay(spark, duck):

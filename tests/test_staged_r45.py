@@ -1,12 +1,11 @@
-"""Round-45 staged operators (operators/staged_r45.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Independent guards: the sniff census
-against doc_id arithmetic + a real magic-byte re-read, the JL census
-against a from-scratch numpy replay (plus the hashlib-vs-SQL-md5 sign
-parity and the Rademacher expectation sanity), inter-arrival moments
-against a Python gap replay, and the heteroscedasticity ρ against
-scipy-free rank arithmetic."""
+"""Round-45 staged operators (operators/staged_r45.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the sniff census against doc_id arithmetic + a real magic-byte re-read, the
+JL census against a from-scratch numpy replay (plus the hashlib-vs-SQL-md5
+sign parity and the Rademacher expectation sanity), inter-arrival moments
+against a Python gap replay, and the heteroscedasticity ρ against scipy-free
+rank arithmetic."""
 
 from __future__ import annotations
 
@@ -17,22 +16,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r45
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r45.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r45_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r45))
+def test_staged_r45_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r45_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r45))
 
 
 def test_magic_sniff_bytes_reread(spark, duck):

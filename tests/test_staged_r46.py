@@ -1,12 +1,11 @@
-"""Round-46 staged operators (operators/staged_r46.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Independent guards: the MaxSim census
-against a pure-Python replay (plus the XOR-popcount dot-product identity
-and the identity-ranking sanity), the WAV energy census against a numpy
-replay of the generator formula AND a byte-level re-read of the staged
-blobs, the Chow F against an exact-fractions replay, and HITS against a
-dict-aggregation replay of both sweeps."""
+"""Round-46 staged operators (operators/staged_r46.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the MaxSim census against a pure-Python replay (plus the XOR-popcount dot-
+product identity and the identity-ranking sanity), the WAV energy census
+against a numpy replay of the generator formula AND a byte-level re-read of
+the staged blobs, the Chow F against an exact-fractions replay, and HITS
+against a dict-aggregation replay of both sweeps."""
 
 from __future__ import annotations
 
@@ -17,22 +16,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r46
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r46.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r46_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r46))
+def test_staged_r46_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r46_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r46))
 
 
 def _gram_h16(w: str) -> int:

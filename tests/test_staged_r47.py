@@ -1,11 +1,10 @@
-"""Round-47 staged operators (operators/staged_r47.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Independent guards: the DP noise
-distribution against exact-fraction CDF thresholds (plus mechanism-level
-sanity on the released counts), the zone-map census against a brute-force
-per-file replay of BOTH layouts, Friedman against a pure-Python midrank
-replay, and MATTR against the naive per-window set count."""
+"""Round-47 staged operators (operators/staged_r47.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the DP noise distribution against exact-fraction CDF thresholds (plus
+mechanism-level sanity on the released counts), the zone-map census against
+a brute-force per-file replay of BOTH layouts, Friedman against a pure-
+Python midrank replay, and MATTR against the naive per-window set count."""
 
 from __future__ import annotations
 
@@ -16,22 +15,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r47
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r47.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r47_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r47))
+def test_staged_r47_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r47_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r47))
 
 
 def test_dp_thresholds_are_exact_geometric_cdf():

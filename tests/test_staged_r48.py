@@ -1,12 +1,10 @@
-"""Round-48 staged operators (operators/staged_r48.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Independent guards: the ZIP index
-against a byte-level re-read of the staged archive (EOCD entry count,
-local-header magic at every claimed offset), the skew census against a
-dict replay plus the cap-dominance invariant, F-max against an
-exact-fractions variance replay, and the velocity peaks against a bisect
-sweep."""
+"""Round-48 staged operators (operators/staged_r48.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the ZIP index against a byte-level re-read of the staged archive (EOCD entry
+count, local-header magic at every claimed offset), the skew census against
+a dict replay plus the cap-dominance invariant, F-max against an exact-
+fractions variance replay, and the velocity peaks against a bisect sweep."""
 
 from __future__ import annotations
 
@@ -17,22 +15,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r48
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r48.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r48_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r48))
+def test_staged_r48_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r48_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r48))
 
 
 def test_zip_index_byte_level_reread(spark):

@@ -1,10 +1,9 @@
-"""Round-49 staged operators (operators/staged_r49.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Independent guards: Theil against a
-math replay plus the additive-decomposition identity, the PPM census
-against a numpy replay AND a byte-level header re-read, the SRT cues
-against a text re-read, and Page's L against a pure-Python midrank
+"""Round-49 staged operators (operators/staged_r49.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+Theil against a math replay plus the additive-decomposition identity, the
+PPM census against a numpy replay AND a byte-level header re-read, the SRT
+cues against a text re-read, and Page's L against a pure-Python midrank
 replay."""
 
 from __future__ import annotations
@@ -17,22 +16,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r49
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r49.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r49_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r49))
+def test_staged_r49_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r49_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r49))
 
 
 def test_theil_math_replay_and_decomposition(spark, duck):

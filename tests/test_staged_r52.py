@@ -1,10 +1,9 @@
-"""Round-52 staged operators (operators/staged_r52.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Independent guards: the closed-form
-water-filling against the SEQUENTIAL cap-and-redistribute replay
-(exact-fractions), the entropy rates against a Counter replay with the
-information-theoretic bounds, the log₂ histogram against the bucket
+"""Round-52 staged operators (operators/staged_r52.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the closed-form water-filling against the SEQUENTIAL cap-and-redistribute
+replay (exact-fractions), the entropy rates against a Counter replay with
+the information-theoretic bounds, the log₂ histogram against the bucket
 identity 2ᵇ ≤ x < 2ᵇ⁺¹, and the cardinality estimator against its own
 identities (PK–FK q-ratio 1, self-join truth = Σf²)."""
 
@@ -18,22 +17,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r52
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r52.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r52_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r52))
+def test_staged_r52_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r52_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r52))
 
 
 def test_epoch_scheduler_sequential_replay(spark, duck):

@@ -1,12 +1,11 @@
-"""Round-56 staged operators (operators/staged_r56.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Independent guards: the conformal
-interval against an order-statistic replay (plus the finite-sample
-coverage guarantee direction), the corpus fingerprint against a hashlib
-replay AND a sensitivity probe (one changed doc flips exactly its
-source), the redundancy curve against a Counter replay with
-monotonicity, and the band census against a fingerprint replay."""
+"""Round-56 staged operators (operators/staged_r56.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+the conformal interval against an order-statistic replay (plus the finite-
+sample coverage guarantee direction), the corpus fingerprint against a
+hashlib replay AND a sensitivity probe (one changed doc flips exactly its
+source), the redundancy curve against a Counter replay with monotonicity,
+and the band census against a fingerprint replay."""
 
 from __future__ import annotations
 
@@ -18,22 +17,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r56
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r56.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r56_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r56))
+def test_staged_r56_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r56_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r56))
 
 
 def test_conformal_order_statistic_replay(spark, duck):

@@ -1,11 +1,10 @@
-"""Round-57 staged operators (operators/staged_r57.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget). Independent guards: Greenwood against
-a curve replay (and consistency with the registered event_survival
-values), the uniformity χ² against a Counter replay, the Poisson
-bootstrap against a hashlib weight replay (plus the embedded CDF table
-against exact math), and PRESS against an explicit leave-one-out refit
+"""Round-57 staged operators (operators/staged_r57.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express. Independent guards:
+Greenwood against a curve replay (and consistency with the registered
+event_survival values), the uniformity χ² against a Counter replay, the
+Poisson bootstrap against a hashlib weight replay (plus the embedded CDF
+table against exact math), and PRESS against an explicit leave-one-out refit
 loop — the strongest possible check of the closed form."""
 
 from __future__ import annotations
@@ -18,22 +17,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r57
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [c for c in staged_r57.DEV_CASES if c[2] is not None]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r57_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r57))
+def test_staged_r57_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r57_nonvacuous(spark, duck):
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+    assert_nonvacuous(spark, duck, wave_keys(staged_r57))
 
 
 def test_greenwood_curve_replay(spark, duck):

@@ -1,7 +1,6 @@
-"""Round-8 staged operators (operators/staged_r8.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until round 8 frees driver-window slots
-(COVERAGE.md verification budget)."""
+"""Round-8 staged operators (operators/staged_r8.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express."""
 
 from __future__ import annotations
 
@@ -9,65 +8,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r8
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [
-    ("event_assoc_rules", staged_r8.event_assoc_rules, staged_r8.EVENT_ASSOC_RULES_ORACLE),
-    ("sim_range_search", staged_r8.sim_range_search, staged_r8.SIM_RANGE_SEARCH_ORACLE),
-    (
-        "event_forecast_baseline",
-        staged_r8.event_forecast_baseline,
-        staged_r8.EVENT_FORECAST_BASELINE_ORACLE,
-    ),
-    ("agg_drift_chi2", staged_r8.agg_drift_chi2, staged_r8.AGG_DRIFT_CHI2_ORACLE),
-    ("join_pit_scd2", staged_r8.join_pit_scd2, staged_r8.JOIN_PIT_SCD2_ORACLE),
-    ("agg_gini", staged_r8.agg_gini, staged_r8.AGG_GINI_ORACLE),
-    ("event_ab_test", staged_r8.event_ab_test, staged_r8.EVENT_AB_TEST_ORACLE),
-    ("fn_date_dim", staged_r8.fn_date_dim, staged_r8.FN_DATE_DIM_ORACLE),
-    (
-        "agg_winsorized_mean",
-        staged_r8.agg_winsorized_mean,
-        staged_r8.AGG_WINSORIZED_MEAN_ORACLE,
-    ),
-    (
-        "event_state_machine",
-        staged_r8.event_state_machine,
-        staged_r8.EVENT_STATE_MACHINE_ORACLE,
-    ),
-    (
-        "scan_binary_files",
-        staged_r8.scan_binary_files,
-        staged_r8.SCAN_BINARY_FILES_ORACLE,
-    ),
-    (
-        "event_markov_stationary",
-        staged_r8.event_markov_stationary,
-        staged_r8.EVENT_MARKOV_STATIONARY_ORACLE,
-    ),
-    (
-        "pipeline_sft_pack",
-        staged_r8.pipeline_sft_pack,
-        staged_r8.PIPELINE_SFT_PACK_ORACLE,
-    ),
-    ("set_union_by_name", staged_r8.set_union_by_name, staged_r8.SET_UNION_BY_NAME_ORACLE),
-    ("event_cohort_ltv", staged_r8.event_cohort_ltv, staged_r8.EVENT_COHORT_LTV_ORACLE),
-]
+from .conftest import SF_DIR, assert_nonvacuous, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r8_oracle_parity(spark, duck, name, fn, oracle):
-    from .conftest import SF_DIR
-
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r8))
+def test_staged_r8_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
 def test_staged_r8_nonvacuous(spark, duck):
-    """Each staged op must return real rows on the fixture (a vacuously
-    empty result would pass parity while testing nothing)."""
-    for _, fn, oracle in CASES:
-        assert duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0] > 0
+    assert_nonvacuous(spark, duck, wave_keys(staged_r8))
 
 
 def test_assoc_rules_sanity(spark):

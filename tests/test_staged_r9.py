@@ -1,7 +1,6 @@
-"""Round-9 staged operators (operators/staged_r9.py): full fn-vs-DuckDB
-value compares — the same check the registry harness applies — run directly,
-since the keys stay unregistered until driver-window slots free up
-(COVERAGE.md verification budget)."""
+"""Round-9 staged operators (operators/staged_r9.py): the wave's fn-vs-DuckDB
+value compares, shared with tests/test_oracle_parity.py through the memoized
+`run_compare`, and the checks an oracle cannot express."""
 
 from __future__ import annotations
 
@@ -11,98 +10,16 @@ import pytest
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r9
 
-from .conftest import SF_DIR, compare_frames
-
-CASES = [
-    ("stat_linreg", staged_r9.stat_linreg, staged_r9.STAT_LINREG_ORACLE),
-    ("stat_corr_matrix", staged_r9.stat_corr_matrix, staged_r9.STAT_CORR_MATRIX_ORACLE),
-    ("agg_skew_kurt", staged_r9.agg_skew_kurt, staged_r9.AGG_SKEW_KURT_ORACLE),
-    ("stat_ks_test", staged_r9.stat_ks_test, staged_r9.STAT_KS_TEST_ORACLE),
-    ("agg_mad", staged_r9.agg_mad, staged_r9.AGG_MAD_ORACLE),
-    ("event_concurrency", staged_r9.event_concurrency, staged_r9.EVENT_CONCURRENCY_ORACLE),
-    ("dq_expectations", staged_r9.dq_expectations, staged_r9.DQ_EXPECTATIONS_ORACLE),
-    ("dedup_spans", staged_r9.dedup_spans, staged_r9.DEDUP_SPANS_ORACLE),
-    ("text_burstiness", staged_r9.text_burstiness, staged_r9.TEXT_BURSTINESS_ORACLE),
-    (
-        "text_js_divergence",
-        staged_r9.text_js_divergence,
-        staged_r9.TEXT_JS_DIVERGENCE_ORACLE,
-    ),
-    (
-        "sim_threshold_sweep",
-        staged_r9.sim_threshold_sweep,
-        staged_r9.SIM_THRESHOLD_SWEEP_ORACLE,
-    ),
-    (
-        "graph_triangle_stats",
-        staged_r9.graph_triangle_stats,
-        staged_r9.GRAPH_TRIANGLE_STATS_ORACLE,
-    ),
-    ("text_fertility", staged_r9.text_fertility, staged_r9.TEXT_FERTILITY_ORACLE),
-    ("stat_anova", staged_r9.stat_anova, staged_r9.STAT_ANOVA_ORACLE),
-    (
-        "pipeline_split_leakage",
-        staged_r9.pipeline_split_leakage,
-        staged_r9.PIPELINE_SPLIT_LEAKAGE_ORACLE,
-    ),
-    (
-        "stat_chi2_independence",
-        staged_r9.stat_chi2_independence,
-        staged_r9.STAT_CHI2_INDEPENDENCE_ORACLE,
-    ),
-    (
-        "event_forecast_ewma",
-        staged_r9.event_forecast_ewma,
-        staged_r9.EVENT_FORECAST_EWMA_ORACLE,
-    ),
-    ("agg_hist2d", staged_r9.agg_hist2d, staged_r9.AGG_HIST2D_ORACLE),
-    (
-        "event_stickiness",
-        staged_r9.event_stickiness,
-        staged_r9.EVENT_STICKINESS_ORACLE,
-    ),
-    (
-        "stat_mann_whitney",
-        staged_r9.stat_mann_whitney,
-        staged_r9.STAT_MANN_WHITNEY_ORACLE,
-    ),
-    (
-        "event_decay_score",
-        staged_r9.event_decay_score,
-        staged_r9.EVENT_DECAY_SCORE_ORACLE,
-    ),
-    (
-        "event_time_to_convert",
-        staged_r9.event_time_to_convert,
-        staged_r9.EVENT_TIME_TO_CONVERT_ORACLE,
-    ),
-    (
-        "text_vocab_coverage",
-        staged_r9.text_vocab_coverage,
-        staged_r9.TEXT_VOCAB_COVERAGE_ORACLE,
-    ),
-    ("agg_topk_share", staged_r9.agg_topk_share, staged_r9.AGG_TOPK_SHARE_ORACLE),
-    (
-        "pipeline_corpus_report",
-        staged_r9.pipeline_corpus_report,
-        staged_r9.PIPELINE_CORPUS_REPORT_ORACLE,
-    ),
-]
+from .conftest import SF_DIR, assert_nonvacuous, compare_frames, run_compare, wave_keys
 
 
-@pytest.mark.parametrize("name,fn,oracle", CASES, ids=[c[0] for c in CASES])
-def test_staged_r9_oracle_parity(spark, duck, name, fn, oracle):
-    res = duck.execute(oracle)
-    cols = [d[0] for d in res.description]
-    compare_frames(fn(spark, SF_DIR), res.fetchall(), cols)
+@pytest.mark.parametrize("key", wave_keys(staged_r9))
+def test_staged_r9_oracle_parity(spark, duck, key):
+    run_compare(spark, duck, key)
 
 
-def test_staged_r9_nonvacuous(duck):
-    """Each staged op must return real rows on the fixture (a vacuously
-    empty result would pass parity while testing nothing)."""
-    for name, _, oracle in CASES:
-        n = duck.execute(f"SELECT count(*) FROM ({oracle})").fetchone()[0]
-        assert n > 0, name
+def test_staged_r9_nonvacuous(spark, duck):
+    assert_nonvacuous(spark, duck, wave_keys(staged_r9))
 
 
 def test_linreg_matches_duckdb_builtin(duck):
