@@ -16,9 +16,13 @@ Design principles (SURVEY.md §1.2, §4):
   semantics allow; Arrow-batched pandas UDFs where Python is unavoidable.
 - Every operator is registered in :mod:`.registry` with a DuckDB oracle SQL
   string so correctness is machine-checkable (the t2 contract).
-- Designed for 100 TB: no ``collect()`` in any operator, shuffles only on
-  declared keys, dimension tables broadcast, O(n²) ops have a blocked
-  two-phase scale path (see operators/similarity.py, operators/dedup.py).
+- Designed for 100 TB: driver actions (``collect()``, ``count()``) fetch
+  bounded-size results only — metadata, fixpoint probes, k-row summaries,
+  never data rows; shuffles only on declared keys, dimension tables
+  broadcast, O(n²) ops have a blocked two-phase scale path (see
+  operators/similarity.py, operators/dedup.py).
+- One lineage policy: frames are materialised and lineage-truncated
+  through :mod:`.pins` (``pin`` / ``persisting``) only.
 """
 
 from .registry import B_PREFIXES, REGISTRY, register, queries, oracle_sql  # noqa: F401

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting
 from ..registry import register
 from ..sources.loader import load_table
 
@@ -589,9 +590,9 @@ def agg_percentile_iterative(
     src = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.round(F.col("l_extendedprice") * 100).cast("long").alias("c"))
-        .persist()
     )
-    try:
+    with persisting() as keep:
+        keep(src)
         head = src.agg(
             F.count("*").alias("n"), F.min("c").alias("lo"), F.max("c").alias("hi")
         ).collect()[0]
@@ -662,8 +663,6 @@ def agg_percentile_iterative(
         bad = [q for q, s in state.items() if s["lo"] < s["hi"]]
         if bad:  # pragma: no cover - 8 iters cover any int64 range
             raise AssertionError(f"quantiles did not converge: {bad}")
-    finally:
-        src.unpersist()
     return spark.createDataFrame(
         [(float(q), state[q]["lo"] / 100.0) for q in qs], "p double, value double"
     )

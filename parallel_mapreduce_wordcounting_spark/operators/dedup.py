@@ -28,6 +28,7 @@ import pandas as pd  # module-level: the pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..registry import REGISTRY, register
 from ..sources.loader import load_table
 
@@ -316,42 +317,36 @@ def min_label_propagation(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     cliques (diameter ≤ 2-3); if a pathological chain exceeds ``max_rounds``
     we RAISE rather than silently return partially-propagated (wrong)
     labels — long-chain graphs belong to :func:`star_contraction`
-    (large-star/small-star, O(log²) rounds regardless of diameter). Each round ``localCheckpoint``s the new label table — this both
-    materializes it AND truncates the logical plan, so the returned
-    DataFrame's lineage is one checkpoint deep, not O(rounds) joins deep
-    (an un-truncated iterative lineage makes every later action replan the
-    whole tree — the audited plan string had 822 exchanges). Memory stays
-    O(1) in rounds (superseded checkpoints are GC-reclaimed). A 100 TB
-    deployment would use a reliable ``checkpoint()`` dir instead (surviving
-    executor loss) and the large-star/small-star variant for long chains.
+    (large-star/small-star, O(log²) rounds regardless of diameter). Each
+    round pins the new label table — this both materializes it AND
+    truncates the logical plan, so the returned DataFrame's lineage is one
+    checkpoint deep, not O(rounds) joins deep (an un-truncated iterative
+    lineage makes every later action replan the whole tree — the audited
+    plan string had 822 exchanges). With local checkpoints, memory stays
+    O(1) in rounds (superseded checkpoints are GC-reclaimed); reliable
+    checkpoints need the cleaner setting named in the ``pins`` module.
     """
-    # r14: edges (and the label init) are localCheckpointed instead of
-    # cached — the cache reused the COMPUTATION but left the full edge-
-    # generation subtree inside every round's logical plan, so each round
-    # re-planned it (the graph_pagerank finding); the checkpoint truncates
-    # it to an ExistingRDD scan. Interleaved A/B on dedup_cluster at sf0.1
+    # r14: edges (and the label init) are pinned instead of cached — the
+    # cache reused the COMPUTATION but left the full edge-generation
+    # subtree inside every round's logical plan, so each round re-planned
+    # it (the graph_pagerank finding); the pin truncates it to an
+    # ExistingRDD scan. Interleaved A/B on dedup_cluster at sf0.1
     # (output-identical 477 rows): 1.32× geomean, never slower.
-    # Superseded checkpoints are GC-reclaimed, so memory stays O(1) in
-    # rounds; a cluster deployment uses persist() + reliable checkpoint.
-    edges = edges.localCheckpoint()
-    labels = (
-        edges.select("u").distinct().withColumn("label", F.col("u")).localCheckpoint()
-    )
+    edges = pin(edges)
+    labels = pin(edges.select("u").distinct().withColumn("label", F.col("u")))
     for _ in range(max_rounds):
         neighbor_min = (
             edges.join(labels.withColumnRenamed("u", "v"), "v")
             .groupBy("u")
             .agg(F.min("label").alias("nmin"))
         )
-        new_labels = (
-            labels.join(neighbor_min, "u", "left")
-            .select(
+        new_labels = pin(
+            labels.join(neighbor_min, "u", "left").select(
                 "u",
                 F.least(
                     F.col("label"), F.coalesce("nmin", F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint()  # materialize + truncate lineage
         )
         changed = (
             new_labels.alias("n")
@@ -390,19 +385,17 @@ def star_contraction(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
     layout every round, no broadcast, no driver data. Converges in
     O(log² n) rounds on ANY graph shape (the fixture's path-graph property
     test: diameter-199 chain, 4 rounds), where min-label propagation needs
-    O(diameter). Each round ``localCheckpoint``s the canonical edge set to
-    truncate lineage (same rationale as min_label_propagation; a cluster
-    deployment would use reliable ``checkpoint()``). Fixpoint = the
+    O(diameter). Each round pins the canonical edge set to truncate
+    lineage (same rationale as min_label_propagation). Fixpoint = the
     canonical (min, max) edge set stops changing; at fixpoint every
     component is a star around its min node, so the label read-off is one
     aggregate."""
-    canon = (
+    canon = pin(
         edges.where(F.col("u") < F.col("v"))
         .select(F.col("u").alias("a"), F.col("v").alias("b"))
         .distinct()
-        .localCheckpoint()
     )
-    nodes = edges.select("u").distinct().cache()  # preserves isolated inputs
+    nodes = edges.select("u").distinct()  # preserves isolated inputs
 
     def both(e: DataFrame) -> DataFrame:
         return e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
@@ -437,30 +430,27 @@ def star_contraction(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
             .distinct()
         )
 
-    try:
-        for _ in range(max_rounds):
-            new = small_star(large_star(canon)).localCheckpoint()
-            changed = (
-                new.subtract(canon).limit(1).count()
-                or canon.subtract(new).limit(1).count()
-            )
-            canon = new
-            if changed == 0:
-                labels = (
-                    both(canon)
-                    .groupBy("u")
-                    .agg(F.min("v").alias("mn"))
-                    .select("u", F.least("mn", "u").alias("label"))
-                )
-                # isolated nodes (no surviving edges) label themselves
-                return nodes.join(labels, "u", "left").select(
-                    "u", F.coalesce("label", "u").alias("label")
-                )
-        raise RuntimeError(
-            f"star_contraction did not converge within {max_rounds} rounds"
+    for _ in range(max_rounds):
+        new = pin(small_star(large_star(canon)))
+        changed = (
+            new.subtract(canon).limit(1).count()
+            or canon.subtract(new).limit(1).count()
         )
-    finally:
-        nodes.unpersist()
+        canon = new
+        if changed == 0:
+            labels = (
+                both(canon)
+                .groupBy("u")
+                .agg(F.min("v").alias("mn"))
+                .select("u", F.least("mn", "u").alias("label"))
+            )
+            # isolated nodes (no surviving edges) label themselves
+            return nodes.join(labels, "u", "left").select(
+                "u", F.coalesce("label", "u").alias("label")
+            )
+    raise RuntimeError(
+        f"star_contraction did not converge within {max_rounds} rounds"
+    )
 
 
 @register("dedup_cluster_star", oracle=REGISTRY["dedup_cluster"].oracle, tier="B")
@@ -582,59 +572,57 @@ def _shingle_id_sets(sh: DataFrame) -> DataFrame:
     kernel (:func:`_pair_intersect_counts`) can merge-intersect
     without re-sorting.
 
-    CONSISTENCY GUARANTEE: the trailing ``localCheckpoint()`` — not the
+    CONSISTENCY GUARANTEE: the trailing ``pin`` — not the
     sort — is what guarantees every verify-join side reads ONE
     materialization of the dictionary ids. (With the dense packing the
     ids are additionally a deterministic function of the vocabulary —
     rank within hash partition plus cumulative partition sizes — but a
-    future pin change must still keep the checkpoint: recompute-on-use
+    future change must still keep the pin: recompute-on-use
     of `monotonically_increasing_id` output is documented
     non-deterministic.) tests/test_round14.py pins output identity
     against a string-array verify on a planted corpus."""
     posts = sh.select("doc_id", F.explode("shingles").alias("shingle"))
     # distinct() already ends in a hash exchange on `shingle`; the r13
     # form's extra repartition("shingle") was a redundant second exchange
-    dct = (
-        posts.select("shingle")
-        .distinct()
-        .sortWithinPartitions("shingle")
-        .withColumn("mid", F.monotonically_increasing_id())
-        .persist()  # counts action + re-key join read ONE materialization
-    )
-    pid = F.shiftright("mid", 33)
-    off = F.col("mid").bitwiseAND(F.lit((1 << 33) - 1))
-    counts = sorted(
-        (int(r["pid"]), int(r["n"]))
-        for r in dct.select(pid.alias("pid"))
-        .groupBy("pid")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    bases: dict[int, int] = {}
-    acc = 0
-    for p, n in counts:
-        bases[p] = acc
-        acc += n
-    use_int = acc < (1 << 31)
-    if bases:
-        base_map = F.create_map(
-            *[x for p, b in bases.items() for x in (F.lit(p), F.lit(b))]
+    with persisting() as keep:
+        # kept: the counts action and the re-key join read ONE materialization
+        dct = keep(
+            posts.select("shingle")
+            .distinct()
+            .sortWithinPartitions("shingle")
+            .withColumn("mid", F.monotonically_increasing_id())
         )
-        sid = F.element_at(base_map, pid) + off
-    else:  # empty vocabulary: joins below are empty either way
-        sid = off
-    dct2 = dct.select("shingle", (sid.cast("int") if use_int else sid).alias("sid"))
-    # pinned: both verify-join sides broadcast this frame, and an unpinned
-    # broadcast build would re-run the explode+dictionary join per side
-    # (the "broadcast-rebuilt branches" pin rule, COVERAGE.md r13)
-    out = (
-        posts.join(dct2, "shingle")
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list("sid")).alias("ids"))
-        .localCheckpoint()
-    )
-    dct.unpersist()
-    return out
+        pid = F.shiftright("mid", 33)
+        off = F.col("mid").bitwiseAND(F.lit((1 << 33) - 1))
+        counts = sorted(
+            (int(r["pid"]), int(r["n"]))
+            for r in dct.select(pid.alias("pid"))
+            .groupBy("pid")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        )
+        bases: dict[int, int] = {}
+        acc = 0
+        for p, n in counts:
+            bases[p] = acc
+            acc += n
+        use_int = acc < (1 << 31)
+        if bases:
+            base_map = F.create_map(
+                *[x for p, b in bases.items() for x in (F.lit(p), F.lit(b))]
+            )
+            sid = F.element_at(base_map, pid) + off
+        else:  # empty vocabulary: joins below are empty either way
+            sid = off
+        dct2 = dct.select("shingle", (sid.cast("int") if use_int else sid).alias("sid"))
+        # pinned: both verify-join sides broadcast this frame, and an unpinned
+        # broadcast build would re-run the explode+dictionary join per side
+        # (the "broadcast-rebuilt branches" pin rule, COVERAGE.md r13)
+        return pin(
+            posts.join(dct2, "shingle")
+            .groupBy("doc_id")
+            .agg(F.sort_array(F.collect_list("sid")).alias("ids"))
+        )
 
 
 def _prefix_postings_ids(sh_ids: DataFrame, tau: float) -> DataFrame:
@@ -686,8 +674,12 @@ def _pair_intersect_counts(batches):
     vectorized call per batch; the pack is collision-free while
     batch_rows · |vocab| < 2⁶² (asserted — at the default 10k-row Arrow
     batch this allows vocabularies past 10¹⁷). Counts are EXACT set
-    intersections (ids unique per doc, arrays sorted ascending by
-    construction in :func:`_shingle_id_sets`); the Jaccard arithmetic
+    intersections only under the PRECONDITION that each array is
+    duplicate-free: every element of ``sa`` found in ``sb`` is counted,
+    once per occurrence, and ``na``/``nb`` are raw array lengths. The
+    engine's inputs satisfy it (ids unique per doc, arrays sorted
+    ascending by construction in :func:`_shingle_id_sets`, given
+    duplicate-free shingle sets); the Jaccard arithmetic
     itself stays in Spark SQL so the rounding/threshold expressions are
     byte-identical to the r13 form. Peak memory is bounded by the Arrow
     batch size (~10k pairs · ~2·|set| ids · 8 B ≈ tens of MB), not by
@@ -737,16 +729,18 @@ _INTERSECT_SCHEMA = "doc_id_a long, doc_id_b long, na int, nb int, c int"
 def ngram_jaccard_pairs_of(sh: DataFrame, tau: float) -> DataFrame:
     """Exact Jaccard pairs ≥ ``tau`` over a shingle-set frame — the
     prefix-filtered engine behind :func:`dedup_ngram_jaccard` (docstring
-    there), reusable over any (doc_id, shingles) input.
+    there), reusable over any (doc_id, shingles) input whose shingle
+    arrays are duplicate-free. That precondition is the caller's: the
+    verify kernel (:func:`_pair_intersect_counts`) counts every matching
+    occurrence, so a repeated shingle would inflate |A∩B| and |A|.
 
-    The shingle frame is ``localCheckpoint``ed first (the r11
+    The shingle frame is pinned first (the r11
     ``containment_pairs_of`` lesson, dedup.py:855): the dictionary build
     and the id re-key join inside :func:`_shingle_id_sets` are separate
     plan branches over it, and without pinning each re-runs the full
     document scan + shingle build. Output identical (plan-only); r13 A/B
     at sf0.1 (min of 3, same session, output-identical 256 pairs):
-    16.2 s unpinned vs 7.6 s pinned (~2.1×). On a real cluster the same
-    pin is ``persist()`` + a reliable checkpoint for lineage truncation.
+    16.2 s unpinned vs 7.6 s pinned (~2.1×).
 
     Round-13 physical changes, output bitwise identical (256 pairs at
     sf0.1, full interleaved A/B in OPTIMIZATION_r13.md): (a) the ranked
@@ -773,9 +767,9 @@ def ngram_jaccard_pairs_of(sh: DataFrame, tau: float) -> DataFrame:
     `array_intersect`, which the r13 plan evaluated 2–3× per pair
     across the pushed join condition and the `c` projection. The
     Jaccard division/threshold/rounding expressions are unchanged."""
-    sh = sh.localCheckpoint()
+    sh = pin(sh)
     sh_ids = _shingle_id_sets(sh)
-    ranked = _prefix_postings_ids(sh_ids, tau).localCheckpoint()
+    ranked = pin(_prefix_postings_ids(sh_ids, tau))
     cand = (
         ranked.select(
             F.col("doc_id").alias("doc_id_a"), "sid", F.col("n_sh").alias("na")
@@ -1108,17 +1102,14 @@ def containment_pairs_of(sh: DataFrame, tau: float) -> DataFrame:
     pruning and losslessness are directly testable on planted corpora
     (tests/test_round11.py, the ngram_jaccard_pairs_of pattern).
 
-    The shingle frame is ``localCheckpoint``ed first: five plan branches
+    The shingle frame is pinned first: five plan branches
     consume it (prefix build, sizes, full postings, and both verify-join
     sides), and without materialization each branch re-scans and
     re-shingles the corpus. Round-12 single-change A/B (same session,
     sf0.1, min of 2, output-identical 256 pairs): removing ONLY this
     checkpoint takes the query 3.3 s → 10.6 s (~3.2×); the other r11 fix
-    (distinct placement) is A/B'd at the output-distinct comment below.
-    A 100 TB deployment writes the shingle table to storage once
-    (reliable ``checkpoint()``/parquet) for the same reason — the
-    min_label_propagation precedent."""
-    sh = sh.localCheckpoint()
+    (distinct placement) is A/B'd at the output-distinct comment below."""
+    sh = pin(sh)
     pref = ngram_prefix_postings(sh, tau)
     posts = sh.select(
         F.col("doc_id").alias("doc_id_big"),

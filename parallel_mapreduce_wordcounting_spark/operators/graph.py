@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..registry import register
 from .dedup import (
     JACCARD_THRESHOLD,
@@ -61,8 +62,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per iteration one join of the edge list against the rank table
     on the source node plus one map-side-combined sum on the destination —
     the textbook iterative-dataflow plan. Node count rides along as a
-    broadcast 1-row aggregate (no collect). A production loop adds
-    localCheckpoint every few iterations to truncate lineage
+    broadcast 1-row aggregate (no collect). A production loop pins the
+    rank table every few iterations to truncate lineage
     (dedup.min_label_propagation shows the pattern); at 3 unrolled
     iterations the plan stays shallow enough not to need it."""
     pairs = dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b")
@@ -71,15 +72,14 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionAll(
         pairs.select(F.col("doc_id_b").alias("u"), F.col("doc_id_a").alias("v"))
     )
-    # r14: localCheckpoint instead of cache — the cached form kept the full
+    # r14: a pin instead of cache — the cached form kept the full
     # MinHash-engine subtree inside EVERY consumer's logical plan (deg, the
     # node count, the rank init, and each unrolled iteration), growing the
     # audited plan string to 220 KB and charging each action real planning
     # time; the checkpoint truncates lineage so consumers plan against an
     # ExistingRDD scan (plans/r14/graph_pagerank_{before,after}.txt: 220 KB
-    # → ~8 KB). Same materialize-once semantics; cluster substitute is
-    # persist() + reliable checkpoint (the engine-wide pin rule).
-    edges = edges.localCheckpoint()
+    # → ~8 KB). Same materialize-once semantics.
+    edges = pin(edges)
     deg = edges.groupBy("u").agg(F.count("*").alias("d"))
     nc = F.broadcast(edges.agg(F.countDistinct("u").alias("n")))
     rank = (

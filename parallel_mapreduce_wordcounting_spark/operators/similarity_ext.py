@@ -284,7 +284,7 @@ def sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per iteration one broadcast join against K×64 centroid rows and
     two map-side-combined aggregates — the corpus streams, never shuffles
     on anything wider than (vec_id, cid). More iterations = a driver loop
-    over the same two steps with localCheckpoint lineage truncation (see
+    over the same two steps with ``pin`` lineage truncation (see
     dedup.min_label_propagation); the production quantizer behind
     sim_topk_blocked (similarity.py) runs exactly that loop on a hashed
     sample."""

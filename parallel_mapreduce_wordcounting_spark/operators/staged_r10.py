@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table, ts_day
 from .dedup import ORACLE_SIMHASH_FP, SHINGLES_CTE, oracle_jaccard_pairs_select
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
@@ -1210,12 +1211,10 @@ def text_bpe_train(spark: SparkSession, sf_dir: str, iters: int = 2) -> DataFram
     # next iteration reads the merged table again — persist the current
     # symbol state so upstream (the corpus wordcount + all prior merges)
     # runs once per iteration, not once per action (measured 8.1 s → ~4 s
-    # at sf0.1); every persist is released in the finally
-    cached = []
-    syms = wc.select("word", "freq", F.split("word", "").alias("syms")).persist()
-    cached.append(syms)
+    # at sf0.1); every kept frame is released on exit
     out_rows = []
-    try:
+    with persisting() as keep:
+        syms = keep(wc.select("word", "freq", F.split("word", "").alias("syms")))
         for it in range(1, iters + 1):
             pairs = (
                 syms.where(F.size("syms") >= 2)  # sequence-descends guard
@@ -1252,17 +1251,13 @@ def text_bpe_train(spark: SparkSession, sf_dir: str, iters: int = 2) -> DataFram
                 f"concat(slice(acc, 1, size(acc) - 1), array({_q(merged)})), "
                 "concat(acc, array(x))))"
             )
-            syms = syms.select("word", "freq", merge_expr.alias("syms")).persist()
-            cached.append(syms)
+            syms = keep(syms.select("word", "freq", merge_expr.alias("syms")))
             vocab_size = (
                 syms.select(F.explode("syms").alias("s")).agg(
                     F.countDistinct("s")
                 ).collect()[0][0]
             )
             out_rows.append((it, a_lit, b_lit, int(best.cnt), int(vocab_size)))
-    finally:
-        for df in cached:
-            df.unpersist()
     return spark.createDataFrame(
         out_rows,
         "it int, merge_a string, merge_b string, pair_count long, vocab_size long",
@@ -1402,8 +1397,8 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .staged_r9 import _span_edges
 
     d = load_table(spark, sf_dir, "documents")
-    e = _span_edges(d).persist()
-    try:
+    with persisting() as keep:
+        e = keep(_span_edges(d))
         deg = (
             e.select(F.col("da").alias("v"))
             .unionAll(e.select(F.col("db").alias("v")))
@@ -1454,10 +1449,7 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("assortativity"),
         )
-        rows = out.collect()  # 1 row; cache hits happen here
-    finally:
-        e.unpersist()
-    return spark.createDataFrame(rows, schema=out.schema)
+        return pin(out)
 
 
 # --- WAV header metadata (second codec-free modality) ------------------------
@@ -1808,18 +1800,13 @@ def dedup_eval_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Both pair frames feed TWO actions each (their own count + the TP
     # join) — unpinned, the full Jaccard engine and the SimHash pipeline
     # each ran twice, making this the repo's slowest key (37.7 s warm at
-    # sf0.1 in TIMING_CENSUS_r12). persist() + the three counts + an
-    # explicit unpersist keeps each side computed once; output identical
-    # (same counts 256/271530/54), pre-measured 6.4–11.6 s (~4–6×).
-    truth = truth.persist()
-    pred = pred.persist()
-    try:
-        n_truth = truth.count()
-        n_pred = pred.count()
+    # sf0.1 in TIMING_CENSUS_r12). Keeping both across the three counts
+    # computes each side once; output identical (same counts
+    # 256/271530/54), pre-measured 6.4–11.6 s (~4–6×).
+    with persisting() as keep:
+        n_truth = keep(truth).count()
+        n_pred = keep(pred).count()
         tp = truth.join(pred, ["doc_id_a", "doc_id_b"]).count()
-    finally:
-        truth.unpersist()
-        pred.unpersist()
     return spark.createDataFrame(
         [
             (

@@ -70,6 +70,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
 
@@ -1408,12 +1409,12 @@ def event_ab_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the 9 lookups below each BROADCAST lf, and an unpersisted lf would be
     # re-derived (events scan + spine + window) once per broadcast — ~10x
-    # wasted scan cost at the 100 TB shape (r8 review finding 7); persist
-    # it and materialize the 1-row result eagerly so the cache is released
-    # in the finally (the graph_triangle_stats convention)
+    # wasted scan cost at the 100 TB shape (r8 review finding 7); it is
+    # kept while the 1-row result is pinned (the graph_triangle_stats
+    # convention)
     lf = _lf_table(
         spark, c.select((F.col("a_t") + F.col("b_t") + F.col("a_c") + F.col("b_c")).alias("m")), "m"
-    ).persist()
+    )
     terms = c.select(
         "*", F.explode(F.sequence(F.lit(0), F.col("a_t") - 1)).alias("i")
     )
@@ -1455,11 +1456,9 @@ def event_ab_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("post_mean_treat"),
         F.round(F.col("p"), 6).alias("p_treat_beats_ctrl"),
     )
-    try:
-        rows = out.collect()  # 1 row; every lf cache hit happens here
-    finally:
-        lf.unpersist()
-    return spark.createDataFrame(rows, schema=out.schema)
+    with persisting() as keep:
+        keep(lf)
+        return pin(out)
 
 
 # --- exact binomial tails + Benjamini–Hochberg -------------------------------
@@ -1539,10 +1538,10 @@ def stat_binom_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     pool = g.agg(F.sum("n").alias("nn"), F.sum("k").alias("kk"))
-    # 3 broadcast lookups below — persist lf so the spine is derived once,
-    # released eagerly after the bounded family table materializes (the
+    # 3 broadcast lookups below — keep lf so the spine is derived once,
+    # released after the bounded family table is pinned (the
     # event_ab_bayes convention, r8 review finding 7)
-    lf = _lf_table(spark, g.agg(F.max("n").alias("m")), "m").persist()
+    lf = _lf_table(spark, g.agg(F.max("n").alias("m")), "m")
     lnp = F.log(F.col("kk") / (1.0 * F.col("nn")))
     lnq = F.log((F.col("nn") - F.col("kk")) / (1.0 * F.col("nn")))
     terms = (
@@ -1609,11 +1608,9 @@ def stat_binom_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("long").alias("rank"),
         F.coalesce(F.col("rank") <= F.col("kmax"), F.lit(False)).alias("rejected"),
     )
-    try:
-        rows = out.collect()  # |event_types| rows; lf cache hits happen here
-    finally:
-        lf.unpersist()
-    return spark.createDataFrame(rows, schema=out.schema)
+    with persisting() as keep:
+        keep(lf)
+        return pin(out)
 
 
 # --- dev-compare case table (consumed by tests/test_staged_r11.py) ------------

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting
 from ..sources.loader import load_table
 from .staged_r15 import _WIN_K, _WIN_W
 
@@ -258,10 +259,10 @@ def dedup_eval_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape); pred reuses dedup_winnow's bucketed fingerprint join; the TP
     join is pair-keyed. No all-pairs anywhere."""
     _, _, dedup_winnow = _winnow_parts()
-    # persist both sides: three counting actions follow, and without the
-    # cache the fingerprint pipeline and the truth self-join each run
-    # twice from scratch (r8 review finding 9)
-    pred = dedup_winnow(spark, sf_dir).select("doc_a", "doc_b").persist()
+    # both sides are kept below: three counting actions follow, and
+    # without the cache the fingerprint pipeline and the truth self-join
+    # each run twice from scratch (r8 review finding 9)
+    pred = dedup_winnow(spark, sf_dir).select("doc_a", "doc_b")
     t = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", F.split(F.col("text"), " ").alias("toks"))
@@ -286,14 +287,11 @@ def dedup_eval_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
-    ).persist()
-    try:
-        n_truth = truth.count()
-        n_pred = pred.count()
+    )
+    with persisting() as keep:
+        n_truth = keep(truth).count()
+        n_pred = keep(pred).count()
         tp = truth.join(pred, ["doc_a", "doc_b"]).count()
-    finally:
-        truth.unpersist()
-        pred.unpersist()
     # the ratios round in SPARK (HALF_UP on doubles, like the oracle's
     # DuckDB round) — Python round() is banker's and flips dyadic halves
     # such as 1/128 (r8 review finding 3)

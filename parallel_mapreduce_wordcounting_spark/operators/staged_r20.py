@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
 
@@ -785,8 +786,8 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph's density."""
     from .dedup import dedup_fuzzy_minhash
 
-    p = dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b").persist()
-    try:
+    with persisting() as keep:
+        p = keep(dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b"))
         p.count()  # materialize so every consumer reads the cache
         pairs = p.select(
             F.col("doc_id_a").alias("u"), F.col("doc_id_b").alias("v")
@@ -833,11 +834,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_closed"
             ),
         )
-        # per-degree result materializes executor-side before the finally
-        # releases the persisted pair set (graph_edge_embeddedness pattern)
-        return out.localCheckpoint()
-    finally:
-        p.unpersist()
+        return pin(out)
 
 
 DEV_CASES = [

@@ -53,6 +53,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
 
@@ -553,22 +554,17 @@ def text_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 disease). Interleaved same-session A/B at sf0.1 (3 rounds,
     # alternating, output row-for-row equal 256 pairs): pinned 1.7–1.9 s
     # vs unpinned 3.3–4.6 s (~2×).
-    pairs = (
-        dedup_fuzzy_minhash(spark, sf_dir)
-        .select("doc_id_a", "doc_id_b")
-        .localCheckpoint()
-    )
+    pairs = pin(dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b"))
     ids = (
         pairs.select(F.col("doc_id_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_id_b").alias("doc_id")))
         .distinct()
     )
     t = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
-    tt = (
+    tt = pin(
         load_table(spark, sf_dir, "documents")
         .join(F.broadcast(ids), "doc_id")
         .select("doc_id", t.alias("t"))
-        .localCheckpoint()
     )
     du = tt.select("doc_id", F.explode("t").alias("w")).groupBy(
         "doc_id", "w"

@@ -53,6 +53,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql
 
@@ -117,18 +118,17 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import dedup_fuzzy_minhash
 
     pairs = dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b")
-    edges = (
+    # pin ONCE up front, then once per peel round (the
+    # min_label_propagation pattern, dedup.py): without it every round's
+    # count() re-runs the whole MinHash pipeline plus all prior rounds —
+    # O(rounds²) recompute and an O(rounds)-deep plan
+    edges = pin(
         pairs.select(F.col("doc_id_a").alias("u"), F.col("doc_id_b").alias("v"))
         .unionByName(
             pairs.select(
                 F.col("doc_id_b").alias("u"), F.col("doc_id_a").alias("v")
             )
         )
-        # materialize + truncate lineage ONCE up front, then once per peel
-        # round (the min_label_propagation pattern, dedup.py): without it
-        # every round's count() re-runs the whole MinHash pipeline plus all
-        # prior rounds — O(rounds²) recompute and an O(rounds)-deep plan
-        .localCheckpoint()
     )
     prev = edges.count()
     for _ in range(64):  # backstop far above any real peel depth
@@ -140,9 +140,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("d") >= _KCORE_K)
             .select("u")
         )
-        nxt = edges.join(keep, "u", "semi").join(
-            keep.select(F.col("u").alias("v")), "v", "semi"
-        ).localCheckpoint()
+        nxt = pin(
+            edges.join(keep, "u", "semi").join(
+                keep.select(F.col("u").alias("v")), "v", "semi"
+            )
+        )
         cnt = nxt.count()
         if cnt == prev:
             break

@@ -51,6 +51,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
 
@@ -262,18 +263,17 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("node"), F.col("doc_id").alias("lab")
     )
     pairs = dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b")
-    edges = (
+    # pin the MinHash edge set ONCE: lpa_labels' rounds (and the final
+    # size join) otherwise re-execute the whole pair pipeline per plan
+    # reference — exactly the re-execution its docstring warns composers
+    # about (graph_modularity persists; this pins)
+    edges = pin(
         pairs.select(F.col("doc_id_a").alias("u"), F.col("doc_id_b").alias("v"))
         .unionByName(
             pairs.select(
                 F.col("doc_id_b").alias("u"), F.col("doc_id_a").alias("v")
             )
         )
-        # materialize the MinHash edge set ONCE: lpa_labels' rounds (and the
-        # final size join) otherwise re-execute the whole pair pipeline per
-        # plan reference — exactly the re-execution its docstring warns
-        # composers about (graph_modularity persists; this checkpoints)
-        .localCheckpoint()
     )
     labels = lpa_labels(docs, edges)
     sizes = labels.groupBy("lab").agg(F.count("*").cast("long").alias("cs"))
@@ -307,9 +307,11 @@ def lpa_labels(docs: DataFrame, edges: DataFrame) -> DataFrame:
         # pattern): the recurrence references `labels` twice per round, so
         # an untruncated tree doubles each round — 2^rounds references to
         # the edge source in the final plan
-        labels = labels.join(mode, "node", "left").select(
-            "node", F.coalesce("new_lab", "lab").alias("lab")
-        ).localCheckpoint()
+        labels = pin(
+            labels.join(mode, "node", "left").select(
+                "node", F.coalesce("new_lab", "lab").alias("lab")
+            )
+        )
     return labels
 
 

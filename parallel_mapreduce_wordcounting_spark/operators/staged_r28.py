@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
 
@@ -105,15 +106,15 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scoring joins — unpersisted, the 4-round lineage would
     re-execute the whole LSH pipeline O(rounds) times (observed as an
     OOM before the cache; graph_triangle_stats precedent), and the
-    cache is released in a finally."""
+    cache is released on exit."""
     from .dedup import dedup_fuzzy_minhash
     from .staged_r25 import lpa_labels
 
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node"), F.col("doc_id").alias("lab")
     )
-    p = dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b").persist()
-    try:
+    with persisting() as keep:
+        p = keep(dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b"))
         p.count()  # force materialization so every consumer reads the cache
         ue = p.select(
             F.least("doc_id_a", "doc_id_b").alias("u"),
@@ -122,7 +123,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         e0 = ue.select("u", "v").unionByName(
             ue.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-        labels = lpa_labels(docs, e0).persist()
+        labels = keep(lpa_labels(docs, e0))
         labels.count()
         m = ue.agg(F.count("*").cast("long").alias("m"))
         deg = e0.groupBy(F.col("u").alias("node")).agg(
@@ -170,12 +171,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.sparkSession.createDataFrame(
             rows, "m long, n_communities long, q_modularity double"
         )
-    finally:
-        p.unpersist()
-        try:
-            labels.unpersist()
-        except NameError:
-            pass
 
 
 # --- Wilcoxon signed-rank (paired halves) ----------------------------------------------

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pins import persisting
 from ..sources.loader import load_table
 from .exact import floor_day_us_sql
 
@@ -260,12 +261,12 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     via nullif identically on both engines.
 
     Scale: the pair set persists ONCE (graph_modularity precedent,
-    released in a finally); then one degree aggregate and two hash
+    released on exit); then one degree aggregate and two hash
     joins keyed on node — all edge-linear."""
     from .dedup import dedup_fuzzy_minhash
 
-    p = dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b").persist()
-    try:
+    with persisting() as keep:
+        p = keep(dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b"))
         p.count()
         e0 = p.select(
             F.col("doc_id_a").alias("u"), F.col("doc_id_b").alias("v")
@@ -303,8 +304,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.sparkSession.createDataFrame(
             rows, "m long, r_assortativity double"
         )
-    finally:
-        p.unpersist()
 
 
 # --- attribution-window sensitivity sweep ------------------------------------------------------

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql
 
@@ -256,13 +257,13 @@ def graph_edge_embeddedness(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 2-clique component — via nullif on both engines).
 
     Scale: the pair set persists once (graph_modularity precedent,
-    released in a finally); common-neighbor counting is the
+    released on exit); common-neighbor counting is the
     edge⋈edge join keyed on the shared endpoint — Σ_v d_v² work, the
     standard triangle-counting bound, never all-pairs."""
     from .dedup import dedup_fuzzy_minhash
 
-    p = dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b").persist()
-    try:
+    with persisting() as keep:
+        p = keep(dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b"))
         p.count()
         e0 = p.select(
             F.col("doc_id_a").alias("u"), F.col("doc_id_b").alias("v")
@@ -312,13 +313,7 @@ def graph_edge_embeddedness(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             (cc == 0).alias("is_bridge"),
         )
-        # materialize + truncate lineage EXECUTOR-side before the finally
-        # unpersists p — the result is per-EDGE, so the previous
-        # collect()/createDataFrame round-trip funneled an unbounded frame
-        # through the driver just to decouple it from the persisted input
-        return res.localCheckpoint()
-    finally:
-        p.unpersist()
+        return pin(res)
 
 
 # --- peak detection -----------------------------------------------------------------------------

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table
 from .exact import money_cents, money_cents_sql
 
@@ -331,12 +332,12 @@ def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
     reached its fixpoint), Spark iterates to the true fixpoint.
 
     Scale: the MinHash pair set persists once (graph_modularity
-    precedent, released in a finally); each peel round is one degree
+    precedent, released on exit); each peel round is one degree
     aggregate + two semi-joins, edge-linear."""
     from .dedup import dedup_fuzzy_minhash
 
-    p = dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b").persist()
-    try:
+    with persisting() as keep:
+        p = keep(dedup_fuzzy_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b"))
         p.count()
         edges = p.select(
             F.col("doc_id_a").alias("u"), F.col("doc_id_b").alias("v")
@@ -350,19 +351,21 @@ def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
             for _ in range(64):  # backstop far above any real peel depth
                 if prev_cnt == 0:
                     break
-                keep = (
+                core = (
                     cur.groupBy("u")
                     .agg(F.count("*").alias("d"))
                     .where(F.col("d") >= k)
                     .select("u")
                 )
-                # materialize + truncate lineage per round (the
-                # min_label_propagation / graph_kcore pattern): without it
-                # every count() re-runs all prior rounds across ALL k values
-                # — O(total-rounds²) recompute and an unboundedly deep plan
-                nxt = cur.join(keep, "u", "semi").join(
-                    keep.select(F.col("u").alias("v")), "v", "semi"
-                ).localCheckpoint()
+                # pin per round (the min_label_propagation / graph_kcore
+                # pattern): without it every count() re-runs all prior rounds
+                # across ALL k values — O(total-rounds²) recompute and an
+                # unboundedly deep plan
+                nxt = pin(
+                    cur.join(core, "u", "semi").join(
+                        core.select(F.col("u").alias("v")), "v", "semi"
+                    )
+                )
                 cnt = nxt.count()
                 if cnt == prev_cnt:
                     break
@@ -374,13 +377,7 @@ def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = result.groupBy(F.col("u").alias("doc_id")).agg(
             F.max("k").cast("long").alias("coreness")
         )
-        # executor-side materialization decouples the per-NODE result from
-        # the persisted input before the finally releases it (the previous
-        # collect()/createDataFrame round-trip pulled an unbounded frame
-        # through the driver)
-        return out.localCheckpoint()
-    finally:
-        p.unpersist()
+        return pin(out)
 
 
 # --- weighted median --------------------------------------------------------------------------

@@ -27,7 +27,7 @@ Contents:
   frontier expansion (Pregel's shape), which is exactly how you answer
   "how far does contamination spread through near-dup links?" without
   materializing transitive closure. Census rows are materialized under
-  a try/finally persist of the edge set (the triangle-stats cache
+  a ``persisting`` block over the edge set (the triangle-stats cache
   convention); all five rows always present.
 - ``pipeline_quality_ablation`` — leave-one-out ablation of the four
   pipeline_filter_funnel quality filters (same expressions, same
@@ -59,6 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
 from .staged_r9 import SPAN_EDGES_ORACLE_CTES, _span_edges
@@ -206,16 +207,10 @@ def graph_bfs_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     undirected edge list on the source endpoint, distinct the targets,
     anti-join everything already visited — one bounded-output shuffle
     per hop, never a transitive-closure materialization. The edge set
-    persists across the 4 hops (try/finally, the triangle-stats cache
+    persists across the 4 hops (``persisting``, the triangle-stats cache
     convention) so the span explode runs once."""
     d = load_table(spark, sf_dir, "documents")
-    persisted = []
-
-    def keep(df: DataFrame) -> DataFrame:
-        persisted.append(df.persist())
-        return df
-
-    try:
+    with persisting() as keep:
         e = keep(_span_edges(d))
         und = keep(
             e.unionByName(
@@ -242,9 +237,6 @@ def graph_bfs_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             visited = keep(visited.unionByName(frontier))
         unreached = nodes.join(visited, "v", "left_anti").count()
         counts.append((-1, unreached))
-    finally:
-        for df in persisted:
-            df.unpersist()
     return spark.createDataFrame(
         [(int(k), int(n)) for k, n in counts], "dist int, n_nodes long"
     )

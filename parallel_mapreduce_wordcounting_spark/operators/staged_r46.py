@@ -58,6 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
 
@@ -557,8 +558,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p")
     )
     pairs = o.join(li, "ok").select("c", "p").distinct()
-    pairs.persist()
-    try:
+    with persisting() as keep:
+        keep(pairs)
         a1 = pairs.groupBy("p").agg(F.count(F.lit(1)).cast("long").alias("a"))
         h1 = (
             pairs.join(a1, "p")
@@ -608,13 +609,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         out = top_a.unionAll(top_h)
-        # pin the bounded census result before the finally-unpersist without
-        # a driver round-trip (r11 verdict: the collect/createDataFrame idiom
-        # is lineage-destroying and invites cargo-culting into unbounded ops)
-        out = out.localCheckpoint()
-    finally:
-        pairs.unpersist()
-    return out
+        return pin(out)
 
 
 DEV_CASES = [

@@ -63,6 +63,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table, ts_day
 
 _D38 = "decimal(38,0)"
@@ -213,8 +214,8 @@ def layout_prune_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", ts_day("l_shipdate").alias("d")
     )
-    li.persist()
-    try:
+    with persisting() as keep:
+        keep(li)
         b = li.agg(
             F.min("d").alias("d0"),
             F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -328,13 +329,7 @@ def layout_prune_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("read_amplification"),
             )
         )
-        # pin the bounded census result before the finally-unpersist without
-        # a driver round-trip (r11 verdict: the collect/createDataFrame idiom
-        # is lineage-destroying and invites cargo-culting into unbounded ops)
-        out = out.localCheckpoint()
-    finally:
-        li.unpersist()
-    return out
+        return pin(out)
 
 
 # --- Friedman repeated-measures rank test --------------------------------------------

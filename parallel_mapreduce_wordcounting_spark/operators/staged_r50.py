@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
 
@@ -295,8 +296,8 @@ def stat_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(ts_day("ts").alias("day"), "event_type")
         .agg(F.count(F.lit(1)).cast("long").alias("v"))
     )
-    g.persist()
-    try:
+    with persisting() as keep:
+        keep(g)
         nrows = g.agg(F.count(F.lit(1)).alias("n"))
         rk = (
             g.crossJoin(F.broadcast(nrows))
@@ -350,13 +351,7 @@ def stat_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("chi2"),
         )
-        # pin the bounded census result before the finally-unpersist without
-        # a driver round-trip (r11 verdict: the collect/createDataFrame idiom
-        # is lineage-destroying and invites cargo-culting into unbounded ops)
-        out = out.localCheckpoint()
-    finally:
-        g.unpersist()
-    return out
+        return pin(out)
 
 
 DEV_CASES = [

@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table, ts_us
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
 
@@ -236,8 +237,8 @@ def stat_mann_kendall_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(money_cents(F.col("value"))).alias("y"))
     )
     s = g.select(F.pmod("day", F.lit(7)).alias("dow"), "day", "y")
-    s.persist()
-    try:
+    with persisting() as keep:
+        keep(s)
         a = s.select(
             F.col("dow"), F.col("day").alias("da"), F.col("y").alias("ya")
         )
@@ -297,13 +298,7 @@ def stat_mann_kendall_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
             z.alias("z"),
             (F.abs(z) > _MK_Z_CUTOFF).alias("trend_detected"),
         )
-        # pin the bounded census result before the finally-unpersist without
-        # a driver round-trip (r11 verdict: the collect/createDataFrame idiom
-        # is lineage-destroying and invites cargo-culting into unbounded ops)
-        out = out.localCheckpoint()
-    finally:
-        s.unpersist()
-    return out
+        return pin(out)
 
 
 # --- 3-bit color quantization + palette census -------------------------------------------

@@ -54,6 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table
 
 _D38 = "decimal(38,0)"
@@ -152,8 +153,8 @@ def pipeline_epoch_scheduler(spark: SparkSession, sf_dir: str) -> DataFrame:
             1,
         ).otherwise(0),
     )
-    flag.persist()
-    try:
+    with persisting() as keep:
+        keep(flag)
         brk = flag.agg(
             F.coalesce(
                 F.max(F.when(F.col("cp") == 1, F.col("rk"))), F.lit(0)
@@ -201,13 +202,7 @@ def pipeline_epoch_scheduler(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("epochs"),
             )
         )
-        # pin the bounded census result before the finally-unpersist without
-        # a driver round-trip (r11 verdict: the collect/createDataFrame idiom
-        # is lineage-destroying and invites cargo-culting into unbounded ops)
-        out = out.localCheckpoint()
-    finally:
-        flag.unpersist()
-    return out
+        return pin(out)
 
 
 # --- character-bigram conditional entropy rate ------------------------------------------

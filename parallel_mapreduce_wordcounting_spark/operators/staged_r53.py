@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table, ts_day, ts_us
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
 
@@ -128,8 +129,8 @@ def stat_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("hi") >= F.col("mx") - _CENSOR_US).alias("censored"),
         )
     )
-    span.persist()
-    try:
+    with persisting() as keep:
+        keep(span)
         grid = span.groupBy("lt").agg(
             F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
             .cast("long")
@@ -191,13 +192,7 @@ def stat_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
             chi2.alias("chi2"),
             (chi2 > _LOGRANK_CHI2_CUTOFF).alias("significant"),
         )
-        # pin the bounded census result before the finally-unpersist without
-        # a driver round-trip (r11 verdict: the collect/createDataFrame idiom
-        # is lineage-destroying and invites cargo-culting into unbounded ops)
-        out = out.localCheckpoint()
-    finally:
-        span.unpersist()
-    return out
+        return pin(out)
 
 
 # --- moving-block bootstrap SE -----------------------------------------------------------

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
 
@@ -100,8 +101,8 @@ def stat_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("h"),
         "y",
     )
-    halves.persist()
-    try:
+    with persisting() as keep:
+        keep(halves)
         a = halves.where(F.col("h") == 0).select(F.col("y").alias("ya"))
         b = halves.where(F.col("h") == 1).select(F.col("y").alias("yb"))
 
@@ -146,13 +147,7 @@ def stat_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("energy_usd"),
             )
         )
-        # pin the bounded census result before the finally-unpersist without
-        # a driver round-trip (r11 verdict: the collect/createDataFrame idiom
-        # is lineage-destroying and invites cargo-culting into unbounded ops)
-        out = out.localCheckpoint()
-    finally:
-        halves.unpersist()
-    return out
+        return pin(out)
 
 
 # --- NDV drift between order halves ------------------------------------------------------
@@ -238,8 +233,8 @@ def dq_cardinality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderpriority",
     )
-    halves.persist()
-    try:
+    with persisting() as keep:
+        keep(halves)
         rows = []
         for col in ("o_custkey", "o_orderpriority"):
             base = halves.select("h", F.col(col).alias("v"))
@@ -280,13 +275,7 @@ def dq_cardinality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         out = rows[0].unionAll(rows[1])
-        # pin the bounded census result before the finally-unpersist without
-        # a driver round-trip (r11 verdict: the collect/createDataFrame idiom
-        # is lineage-destroying and invites cargo-culting into unbounded ops)
-        out = out.localCheckpoint()
-    finally:
-        halves.unpersist()
-    return out
+        return pin(out)
 
 
 # --- 2x decimation with boxcar prefilter over PCM16 blobs --------------------------------

@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table, ts_day
 from .dedup import ORACLE_SIMHASH_FP, SIMHASH_BITS
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
@@ -109,8 +110,8 @@ def stat_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = r.where(F.col("yp").isNotNull()).select(
         "t", F.abs(F.col("y") - F.col("yp")).alias("e")
     )
-    res.persist()
-    try:
+    with persisting() as keep:
+        keep(res)
         nn = res.agg(F.count(F.lit(1)).cast("long").alias("n"))
         wn = res.crossJoin(F.broadcast(nn))
         cal = wn.where(
@@ -155,13 +156,7 @@ def stat_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_covered").cast("double") / F.col("n_test"), 6
             ).alias("coverage"),
         )
-        # pin the bounded census result before the finally-unpersist without
-        # a driver round-trip (r11 verdict: the collect/createDataFrame idiom
-        # is lineage-destroying and invites cargo-culting into unbounded ops)
-        out = out.localCheckpoint()
-    finally:
-        res.unpersist()
-    return out
+        return pin(out)
 
 
 # --- order-invariant corpus fingerprint ----------------------------------------------------
@@ -243,8 +238,8 @@ def text_redundancy_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         F.split(F.lower("text"), " ").alias("ws")
     )
-    d.persist()
-    try:
+    with persisting() as keep:
+        keep(d)
         outs = []
         for k in _REDUNDANCY_KS:
             grams = (
@@ -293,13 +288,7 @@ def text_redundancy_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = outs[0]
         for o in outs[1:]:
             out = out.unionAll(o)
-        # pin the bounded census result before the finally-unpersist without
-        # a driver round-trip (r11 verdict: the collect/createDataFrame idiom
-        # is lineage-destroying and invites cargo-culting into unbounded ops)
-        out = out.localCheckpoint()
-    finally:
-        d.unpersist()
-    return out
+        return pin(out)
 
 
 # --- SimHash pigeonhole band health ----------------------------------------------------------

@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting, pin
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
 
@@ -125,8 +126,8 @@ def stat_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "y",
         )
     )
-    ch.persist()
-    try:
+    with persisting() as keep:
+        keep(ch)
         st = ch.groupBy("w", "c").agg(
             F.count(F.lit(1)).cast(_D38).alias("n"),
             F.sum("y").alias("sy"),
@@ -164,13 +165,7 @@ def stat_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.avg("ratio"), 6).alias("mean_rs"),
             )
         )
-        # pin the bounded census result before the finally-unpersist without
-        # a driver round-trip (r11 verdict: the collect/createDataFrame idiom
-        # is lineage-destroying and invites cargo-culting into unbounded ops)
-        out = out.localCheckpoint()
-    finally:
-        ch.unpersist()
-    return out
+        return pin(out)
 
 
 # --- Cronbach's alpha over the day x event-type matrix ---------------------------------------
@@ -226,8 +221,8 @@ def stat_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("v", F.lit(0).cast(_D38)).alias("v"),
         )
     )
-    grid.persist()
-    try:
+    with persisting() as keep:
+        keep(grid)
         item = grid.groupBy("event_type").agg(
             F.count(F.lit(1)).cast(_D38).alias("n"),
             F.sum("v").alias("s"),
@@ -278,13 +273,7 @@ def stat_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("cronbach_alpha"),
         )
-        # pin the bounded census result before the finally-unpersist without
-        # a driver round-trip (r11 verdict: the collect/createDataFrame idiom
-        # is lineage-destroying and invites cargo-culting into unbounded ops)
-        out = out.localCheckpoint()
-    finally:
-        grid.unpersist()
-    return out
+        return pin(out)
 
 
 # --- two-sided trimmed mean ------------------------------------------------------------------

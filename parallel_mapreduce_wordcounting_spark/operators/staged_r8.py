@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..registry import register
 from ..sources.loader import load_table, ts_day
 from .dedup import ORACLE_SIMHASH_FP
@@ -1101,13 +1102,8 @@ def dedup_simhash_pairs(
     # same canonical subtree — plans/r14/dedup_simhash_pairs_before.txt),
     # so each branch re-evaluated the interpreted 60-bit SimHash fold over
     # the whole corpus. Interleaved A/B at sf0.1 (output-identical 13,780
-    # rows): 1.55× geomean. Cluster substitute: persist() + reliable
-    # checkpoint (the engine-wide pin rule).
-    fp = (
-        raw.groupBy("simhash")
-        .agg(F.count("*").alias("n_members"))
-        .localCheckpoint()
-    )
+    # rows): 1.55× geomean.
+    fp = pin(raw.groupBy("simhash").agg(F.count("*").alias("n_members")))
     keyed = fp.select(
         "simhash",
         "n_members",

@@ -67,6 +67,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pins import persisting
 from ..registry import register
 from ..sources.loader import load_table, ts_day, ts_us
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
@@ -1151,21 +1152,19 @@ def graph_triangle_stats(
     members, so the default cap of 128 leaves the registered fixture
     output (and its hash-green verdict) bitwise unchanged."""
     d = load_table(spark, sf_dir, "documents")
-    e = _span_edges(d, k, max_postings).persist()
-    # referenced several times below (degrees, edge count, 3-way triangle
-    # join): without the cache Spark re-runs the shingle explode + self-join
-    # per reference (the dedup.py:189 convention for self-joined
-    # intermediates). The result is a 1-row census, so it is materialized
-    # below while the cache is live and the cache released in a finally —
-    # the agg_percentile_iterative pattern — instead of leaking cached
-    # blocks into long-lived sessions.
+    e = _span_edges(d, k, max_postings)
+    # kept: referenced several times below (degrees, edge count, 3-way
+    # triangle join), and without the cache Spark re-runs the shingle
+    # explode + self-join per reference. The result is a 1-row census,
+    # materialized while the cache is live.
     deg = (
         e.select(F.col("da").alias("v"))
         .unionAll(e.select(F.col("db").alias("v")))
         .groupBy("v")
         .agg(F.count("*").alias("d"))
     )
-    try:
+    with persisting() as keep:
+        keep(e)
         stats = deg.agg(
             F.count("*").cast("long").alias("n_nodes"),
             F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("long").alias("n_wedges"),
@@ -1195,23 +1194,18 @@ def graph_triangle_stats(
         orient = (n_wedges or 0) > _ORIENT_WEDGE_EDGE_FACTOR * max(n_edges, 1)
         # deg passed through so the orientation reuses this function's own
         # degree aggregate instead of re-aggregating the edge set
-        eo = (orient_by_degree(e, deg) if orient else e).persist()
-        try:
-            n_tri = (
-                eo.alias("e1")
-                .join(eo.alias("e2"), F.col("e1.db") == F.col("e2.da"))
-                .join(
-                    eo.alias("e3"),
-                    (F.col("e1.da") == F.col("e3.da"))
-                    & (F.col("e2.db") == F.col("e3.db")),
-                )
-                .agg(F.count("*").cast("long").alias("n_triangles"))
-                .first()["n_triangles"]
+        eo = keep(orient_by_degree(e, deg) if orient else e)
+        n_tri = (
+            eo.alias("e1")
+            .join(eo.alias("e2"), F.col("e1.db") == F.col("e2.da"))
+            .join(
+                eo.alias("e3"),
+                (F.col("e1.da") == F.col("e3.da"))
+                & (F.col("e2.db") == F.col("e3.db")),
             )
-        finally:
-            eo.unpersist()
-    finally:
-        e.unpersist()
+            .agg(F.count("*").cast("long").alias("n_triangles"))
+            .first()["n_triangles"]
+        )
     # assemble the 1-row census; clustering is rounded with F.round so the
     # half-away-from-zero semantics match the DuckDB oracle exactly
     # (python's round() is half-to-even)

@@ -26,9 +26,14 @@ TABLES = (
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     s = (
-        SparkSession.builder.master("local[8]")
+        # task slots follow the host's usable cores; shuffle partitions and
+        # the default slice count (spark.range / createDataFrame / file
+        # splits) stay fixed at 8, so partition-dependent results do not
+        # move from host to host
+        SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
         .appName("pmrwc-tests")
         .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.default.parallelism", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "8g")
