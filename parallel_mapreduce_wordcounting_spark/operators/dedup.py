@@ -497,8 +497,13 @@ def dedup_ngram_jaccard(
        SUPERSET — the filter is lossless;
     3. a size filter (τ·na ≤ nb, applied under da < db symmetry) prunes
        candidates no Jaccard value could pass;
-    4. candidates are verified with the EXACT Jaccard over the full
-       shingle arrays (array_intersect, JVM-side) and thresholded.
+    4. a PAIR-level positional bound (PPJoin) prunes the rest: with m
+       prefix matches whose last sits at 0-based positions (ia, ib),
+       every other shared shingle sorts after it in BOTH documents, so
+       |A∩B| ≤ m + min(na−1−ia, nb−1−ib), and a pair is kept only if
+       that reaches τ/(1+τ)·(na+nb) — the overlap J ≥ τ needs;
+    5. candidates are verified with the EXACT Jaccard over the full
+       shingle sets (dictionary ids, Arrow kernel) and thresholded.
 
     Output is bitwise identical to the brute-force oracle — the filter
     changes COST, never the result set. The scale win over the unfiltered
@@ -546,8 +551,12 @@ def ngram_prefix_postings(sh: DataFrame, tau: float) -> DataFrame:
 
 def _shingle_id_sets(sh: DataFrame) -> DataFrame:
     """Dictionary-encode a (pinned) shingle-set frame into ``(doc_id,
-    ids: sorted array<int|bigint>)`` — the cheap VERIFY medium of the
-    prefix engine (round 13; densified + sorted round 14).
+    ids, order)``: ``ids`` is the document's id array sorted ascending —
+    the cheap VERIFY medium of the prefix engine (round 13; densified +
+    sorted round 14) — and ``order`` the same ids sorted by the global
+    prefix order (df ASC, sid ASC), whose leading slice is the
+    document's prefix. The dictionary is a ``groupBy(shingle)`` count, so
+    df rides the exchange the distinct vocabulary needs anyway.
 
     The exact-verification step intersects each candidate pair's full
     shingle sets; doing that on ``array<string>`` hashes ~|A|+|B| UTF8
@@ -568,7 +577,12 @@ def _shingle_id_sets(sh: DataFrame) -> DataFrame:
     0..|vocab|−1, cast to int32 while |vocab| < 2³¹ (halving verify
     bytes; past that the same code keeps bigint, decided from the
     collected total, so the dtype is scale-adaptive, not a local[]
-    assumption). The id arrays are emitted SORTED so the Arrow verify
+    assumption). The bases travel as a ``create_map`` LITERAL with one
+    entry per dictionary partition, so the collected rows and the plan
+    grow linearly with ``spark.sql.shuffle.partitions``: fine at tens to
+    hundreds of partitions, awkward at cluster counts in the thousands
+    (there a window sum over the counts joined back on the partition id
+    keeps it distributed). ``ids`` is emitted SORTED so the Arrow verify
     kernel (:func:`_pair_intersect_counts`) can merge-intersect
     without re-sorting.
 
@@ -582,13 +596,11 @@ def _shingle_id_sets(sh: DataFrame) -> DataFrame:
     non-deterministic.) tests/test_round14.py pins output identity
     against a string-array verify on a planted corpus."""
     posts = sh.select("doc_id", F.explode("shingles").alias("shingle"))
-    # distinct() already ends in a hash exchange on `shingle`; the r13
-    # form's extra repartition("shingle") was a redundant second exchange
     with persisting() as keep:
         # kept: the counts action and the re-key join read ONE materialization
         dct = keep(
-            posts.select("shingle")
-            .distinct()
+            posts.groupBy("shingle")
+            .agg(F.count("*").alias("df"))
             .sortWithinPartitions("shingle")
             .withColumn("mid", F.monotonically_increasing_id())
         )
@@ -614,50 +626,18 @@ def _shingle_id_sets(sh: DataFrame) -> DataFrame:
             sid = F.element_at(base_map, pid) + off
         else:  # empty vocabulary: joins below are empty either way
             sid = off
-        dct2 = dct.select("shingle", (sid.cast("int") if use_int else sid).alias("sid"))
-        # pinned: both verify-join sides broadcast this frame, and an unpinned
-        # broadcast build would re-run the explode+dictionary join per side
-        # (the "broadcast-rebuilt branches" pin rule, COVERAGE.md r13)
+        sid = sid.cast("int") if use_int else sid
+        dct2 = dct.select("shingle", sid.alias("sid"), "df")
+        # pinned: the two verify-join and two prefix self-join sides read it;
+        # unpinned, each re-runs the explode+dictionary join (the
+        # "broadcast-rebuilt branches" pin rule, COVERAGE.md r13)
+        order = F.sort_array(F.collect_list(F.struct("df", "sid"))).getField("sid")
         return pin(
             posts.join(dct2, "shingle")
             .groupBy("doc_id")
-            .agg(F.sort_array(F.collect_list("sid")).alias("ids"))
+            .agg(order.alias("order"))
+            .select("doc_id", F.sort_array("order").alias("ids"), "order")
         )
-
-
-def _prefix_postings_ids(sh_ids: DataFrame, tau: float) -> DataFrame:
-    """AllPairs prefix postings over the dictionary-encoded id sets —
-    ``(doc_id, sid, n_sh)`` restricted to each document's first
-    ``|a| − ⌈τ·|a|⌉ + 1`` ids under the global (df ASC, sid) order.
-
-    Round 14: candidate generation moved from shingle strings onto the
-    dictionary ids (the dictionary already exists for the verify). The
-    prefix filter's losslessness needs only SOME consistent total order
-    over tokens (:func:`dedup_ngram_jaccard` step 2's proof never uses
-    what the order IS); ids are bijective with shingles, so
-    (df ASC, sid) is such an order. The CANDIDATE SUPERSET may differ
-    from the string-order engine's, but the exact verify decides
-    membership, so the verified output is identical — pinned against
-    the string-order engine on planted corpora (tests/test_round14.py)
-    and by the oracle. Cost: the postings explode, the df aggregate,
-    the rank window and the candidate self-join all run on int32/64
-    keys instead of ~24-byte strings (guide §2.3, narrower types), and
-    `n_sh` rides the explode projection instead of a separate sizes
-    join."""
-    posts = sh_ids.select(
-        "doc_id", F.size("ids").alias("n_sh"), F.explode("ids").alias("sid")
-    )
-    df_s = posts.groupBy("sid").agg(F.count("*").alias("df_s"))
-    return (
-        posts.join(df_s, "sid")
-        .withColumn(
-            "pos",
-            F.row_number().over(Window.partitionBy("doc_id").orderBy("df_s", "sid")),
-        )
-        # same 1e-9 fp back-off as ngram_prefix_postings (lossy-ceil guard)
-        .where(F.col("pos") <= F.col("n_sh") - F.ceil(tau * F.col("n_sh") - 1e-9) + 1)
-        .select("doc_id", "sid", "n_sh")
-    )
 
 
 def _pair_intersect_counts(batches):
@@ -742,52 +722,71 @@ def ngram_jaccard_pairs_of(sh: DataFrame, tau: float) -> DataFrame:
     at sf0.1 (min of 3, same session, output-identical 256 pairs):
     16.2 s unpinned vs 7.6 s pinned (~2.1×).
 
-    Round-13 physical changes, output bitwise identical (256 pairs at
-    sf0.1, full interleaved A/B in OPTIMIZATION_r13.md): (a) the ranked
-    prefix postings pin — the candidate self-join's two sides otherwise
-    each rebuild the df aggregation + rank window (plan nodes 1–24 vs
-    27–50 in plans/r13/dedup_ngram_jaccard_before.txt; ReusedExchange
-    does not fire across the sides' differing projections); (b) exact
-    verification runs on dictionary-encoded sets
-    (:func:`_shingle_id_sets`) instead of string arrays — the engine's
-    measured wall. A round-13 A/B of md5-hash join keys measured SLOWER
-    (8.3–9.2 s vs 7.7 s) and was rejected (hashing 260k strings twice
-    costs more than the long join saves — the dictionary avoids that by
-    re-keying ONCE and reusing the ids everywhere).
+    Candidates come from the pinned id sets alone: each document's prefix
+    is the leading slice of its ``order`` column (ids sorted by the global
+    (df ASC, sid) order, a total order, so the prefix filter stays
+    lossless), posexploded so every posting carries its 0-based position.
+    The prefix self-join's rows are grouped per pair on the exchange the
+    candidate ``distinct`` used to take, counting the matches ``m`` and
+    keeping the last matched positions (ia, ib); only a pair whose bound
+    ``m + min(na−1−ia, nb−1−ib)`` reaches τ/(1+τ)·(na+nb) goes on to the
+    verify (:func:`dedup_ngram_jaccard` step 4). The bound is per PAIR:
+    the r13 per-join-row form, rejected as a wash, kept a pair alive
+    through its first and loosest match. Output identical (1,419 pairs on
+    the bench corpus at seed 1): 94,046 → 41,714 verified candidates and
+    20 → 15 Spark jobs per query.
 
-    Round-14 physical changes, verified output identical (256 pairs at
-    sf0.1, interleaved A/Bs in OPTIMIZATION_r14.md): (a) dictionary ids
-    densified to int32 while the vocabulary fits (two-level packing,
-    :func:`_shingle_id_sets`); (b) candidate generation moved onto the
-    ids too (:func:`_prefix_postings_ids` — global order (df ASC, sid),
-    still a total order, so the prefix filter stays lossless and the
-    exact verify returns the identical pair set); (c) the exact verify
-    runs in ONE Arrow kernel pass per pair
-    (:func:`_pair_intersect_counts`) instead of the JVM
-    `array_intersect`, which the r13 plan evaluated 2–3× per pair
-    across the pushed join condition and the `c` projection. The
-    Jaccard division/threshold/rounding expressions are unchanged."""
+    Earlier physical changes, each verified output-identical (256 pairs at
+    sf0.1, interleaved A/Bs in OPTIMIZATION_r13.md / OPTIMIZATION_r14.md):
+    exact verification on dictionary-encoded sets instead of string
+    arrays (md5-hash join keys measured SLOWER: 8.3–9.2 s vs 7.7 s); ids
+    densified to int32; and ONE Arrow kernel pass per pair
+    (:func:`_pair_intersect_counts`) instead of the JVM `array_intersect`
+    the r13 plan evaluated 2–3× per pair. The Jaccard
+    division/threshold/rounding expressions are unchanged."""
     sh = pin(sh)
     sh_ids = _shingle_id_sets(sh)
-    ranked = pin(_prefix_postings_ids(sh_ids, tau))
-    cand = (
-        ranked.select(
-            F.col("doc_id").alias("doc_id_a"), "sid", F.col("n_sh").alias("na")
-        )
-        .join(
-            ranked.select(
-                F.col("doc_id").alias("doc_id_b"), "sid", F.col("n_sh").alias("nb")
-            ),
+    n = F.size("order")
+    # prefix length |a| − ⌈τ·|a|⌉ + 1, with the same 1e-9 fp back-off as
+    # ngram_prefix_postings (lossy-ceil guard)
+    plen = (n - F.ceil(tau * n - 1e-9) + 1).cast("int")
+    prefix = sh_ids.select(
+        "doc_id",
+        n.alias("n"),
+        F.posexplode(F.slice("order", 1, plen)).alias("pos", "sid"),
+    )
+
+    def side(s: str) -> DataFrame:
+        return prefix.select(
+            F.col("doc_id").alias(f"doc_id_{s}"),
             "sid",
+            F.col("n").alias(f"n{s}"),
+            F.col("pos").alias(f"pos_{s}"),
         )
+
+    na, nb = F.col("na"), F.col("nb")
+    cand = (
+        side("a")
+        .join(side("b"), "sid")
         .where(
             (F.col("doc_id_a") < F.col("doc_id_b"))
             # size filter: J ≥ τ needs τ·max(na,nb) ≤ min(na,nb); the
             # 1e-9 back-off keeps fp overshoot from pruning a boundary pair
-            & (tau * F.greatest("na", "nb") - 1e-9 <= F.least("na", "nb"))
+            & (tau * F.greatest(na, nb) - 1e-9 <= F.least(na, nb))
+        )
+        .groupBy("doc_id_a", "doc_id_b", "na", "nb")
+        .agg(
+            F.count("*").alias("m"),
+            F.max("pos_a").alias("ia"),
+            F.max("pos_b").alias("ib"),
+        )
+        # positional bound (dedup_ngram_jaccard step 4): the most |A∩B| can
+        # be must still reach the overlap J ≥ τ needs; same 1e-9 back-off
+        .where(
+            F.col("m") + F.least(na - 1 - F.col("ia"), nb - 1 - F.col("ib"))
+            >= tau / (1 + tau) * (na + nb) - 1e-9
         )
         .select("doc_id_a", "doc_id_b")
-        .distinct()
     )
     return (
         cand.join(

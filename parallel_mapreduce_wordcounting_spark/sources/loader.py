@@ -57,19 +57,24 @@ def _ship_package(spark: SparkSession) -> None:
     worker's import path, which the driver's session does not guarantee
     (workers inherit neither the driver's sys.path nor its cwd). Shipping a
     zip via addPyFile closes that hole for good; done once per context.
+
+    The zip's temp dir is removed when the interpreter exits, not after
+    ``addPyFile``: local-mode executors fetch the file lazily from the
+    driver's file server, so it must outlive every job of the context.
     """
     sc = spark.sparkContext
     if getattr(sc, "_pmrwc_pkg_shipped", False):
         return
+    import atexit
     import pathlib
+    import shutil
     import tempfile
     import zipfile
 
     pkg_root = pathlib.Path(__file__).resolve().parents[1]
-    zpath = (
-        pathlib.Path(tempfile.mkdtemp(prefix="pmrwc_pkg_"))
-        / "parallel_mapreduce_wordcounting_spark.zip"
-    )
+    tmp = tempfile.mkdtemp(prefix="pmrwc_pkg_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    zpath = pathlib.Path(tmp) / "parallel_mapreduce_wordcounting_spark.zip"
     with zipfile.ZipFile(zpath, "w") as z:
         for p in sorted(pkg_root.rglob("*.py")):
             z.write(p, f"{pkg_root.name}/{p.relative_to(pkg_root)}")

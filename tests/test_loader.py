@@ -9,6 +9,10 @@ environment shift breaks THIS test, not seven operators."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +21,8 @@ from pyspark.sql.types import TimestampType
 from parallel_mapreduce_wordcounting_spark.sources.loader import load_table, ts_us
 
 from .conftest import SF_DIR
+
+REPO = Path(__file__).resolve().parents[1]
 
 _SF_ROOT = os.path.dirname(SF_DIR.rstrip("/"))
 _ALL_SF = sorted(
@@ -97,3 +103,45 @@ def test_ts_day_floors_pre_epoch_and_matches_oracle_form(spark, duck):
     want = {us: us // d for us in probes}  # python // floors
     assert got == want
     assert want_sql == want
+
+
+# Its own interpreter: the shipped package's temp dir goes away at exit.
+_SHIP_SCRIPT = textwrap.dedent(
+    """
+    import glob, os, sys, tempfile
+    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
+    from parallel_mapreduce_wordcounting_spark.sources.loader import load_table
+
+    spark = (SparkSession.builder.master("local[1]")
+             .config("spark.ui.enabled", "false").getOrCreate())
+    docs = load_table(spark, sys.argv[1], "documents")
+    # a Python UDF makes a worker import the shipped zip
+    n = docs.select(F.udf(lambda s: len(s), "int")("text")).count()
+    shipped = glob.glob(os.path.join(tempfile.gettempdir(), "pmrwc_pkg_*"))
+    spark.stop()
+    print("SHIPPED", n, len(shipped))
+    """
+)
+
+
+def test_shipped_package_dir_removed_at_exit(tmp_path):
+    """The zip ``load_table`` ships to the workers lives in a ``pmrwc_pkg_*``
+    temp dir for the whole session and is gone once the interpreter exits."""
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(REPO), env.get("PYTHONPATH", "")) if p
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _SHIP_SCRIPT, SF_DIR],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    lines = [x for x in proc.stdout.splitlines() if x.startswith("SHIPPED ")]
+    assert proc.returncode == 0 and lines, proc.stderr[-4000:]
+    _, rows, shipped = lines[-1].split()
+    assert int(rows) > 0 and int(shipped) == 1  # the dir existed while in use
+    assert not list(tmp_path.glob("pmrwc_pkg_*"))

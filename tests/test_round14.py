@@ -1,13 +1,18 @@
 """Round-14 pins (optimization round 2): the Jaccard engine's dense-int32
 dictionary + Arrow verify kernel must be output-identical to a string-array
-verify (the r13 ADVICE consistency item), the verify kernel's exact
-intersection counts, and the MaxSim kernel's bounded-memory chunking (the
-r13 ADVICE memory item) must be score-identical to the unchunked fold."""
+verify (the r13 ADVICE consistency item), its pair-level positional bound
+must keep every pair at the threshold, its construct-time job count must
+stay within budget, the verify kernel's exact intersection counts, and the
+MaxSim kernel's bounded-memory chunking (the r13 ADVICE memory item) must
+be score-identical to the unchunked fold."""
 
 from __future__ import annotations
 
 import itertools
+import math
 import random
+from collections import defaultdict
+from fractions import Fraction
 
 import numpy as np
 import pandas as pd
@@ -19,8 +24,11 @@ from parallel_mapreduce_wordcounting_spark.operators import staged_r46
 from parallel_mapreduce_wordcounting_spark.operators.dedup import (
     _pair_intersect_counts,
     _shingle_id_sets,
+    dedup_ngram_jaccard,
     ngram_jaccard_pairs_of,
 )
+
+from .conftest import SF_DIR
 
 
 def _sh_frame(spark, sets):
@@ -75,6 +83,80 @@ def test_jaccard_dictionary_verify_matches_string_verify(spark):
     assert got == _string_verify_pairs(spark, sets, 0.3)
 
 
+def _overlap_needed(tau, na, nb):
+    """Least |A∩B| with J ≥ τ: ⌈τ/(1+τ)·(na+nb)⌉, in exact arithmetic."""
+    t = Fraction(str(tau))
+    return math.ceil(t / (1 + t) * (na + nb))
+
+
+def _planted_bound_corpus(seed, tau):
+    """Random background sets plus planted pairs AT the threshold: (a)
+    containment pairs |small| = ⌈τ·|big|⌉, whose positional bound is tight
+    in ANY token order (every shared shingle after the last prefix match
+    lies in the subset's suffix), planted subset-first and superset-first
+    so each side's term of ``least(na−1−ia, nb−1−ib)`` is the binding one;
+    (b) pairs sharing exactly ⌈τ/(1+τ)·(na+nb)⌉ shingles. Returns the sets
+    and the planted pairs (doc index pairs, lower index first)."""
+    rng = random.Random(seed)
+    pool = [f"t{i}" for i in range(60)]
+    sets = [rng.sample(pool, rng.randint(4, 14)) for _ in range(15)]
+    planted = []
+    for k in range(6):
+        nbig = rng.randint(5, 16)
+        nsmall = math.ceil(Fraction(str(tau)) * nbig)
+        big = rng.sample(pool, nbig)
+        small = rng.sample(big, nsmall)
+        pair = [small, big] if k % 2 == 0 else [big, small]
+        planted.append((len(sets), len(sets) + 1))
+        sets += pair
+    for k in range(4):
+        na, nb = rng.randint(4, 14), rng.randint(4, 14)
+        o = _overlap_needed(tau, na, nb)
+        if o > min(na, nb):
+            continue
+        shared = rng.sample(pool, o)
+        own = [f"p{seed}_{k}_{i}" for i in range(na + nb - 2 * o)]
+        planted.append((len(sets), len(sets) + 1))
+        sets += [shared + own[: na - o], shared + own[na - o :]]
+    return sets, planted
+
+
+@pytest.mark.parametrize("seed", [11, 12, 13])
+@pytest.mark.parametrize("tau", [0.3, 0.5, 0.8])
+def test_jaccard_positional_bound_keeps_threshold_pairs(spark, tau, seed):
+    """The pair-level positional bound prunes only pairs that cannot reach
+    τ: on corpora whose planted pairs sit exactly at the overlap threshold
+    (and at a tight bound), the engine returns the brute-force pair set."""
+    sets, planted = _planted_bound_corpus(seed, tau)
+    for i, j in planted:
+        a, b = set(sets[i]), set(sets[j])
+        need = _overlap_needed(tau, len(a), len(b))
+        assert len(a & b) == need, "planted pair must sit at the threshold"
+    want = _string_verify_pairs(spark, sets, tau)
+    assert {(i, j) for i, j, _ in want} >= set(planted)
+    got = {
+        (r.doc_id_a, r.doc_id_b, r.jaccard)
+        for r in ngram_jaccard_pairs_of(_sh_frame(spark, sets), tau).collect()
+    }
+    assert got == want
+
+
+def test_ngram_jaccard_construct_job_budget(spark):
+    """Spark jobs fired while ``dedup_ngram_jaccard`` builds its DataFrame
+    (its pins and the dictionary's partition counts) stay within 9, so a
+    re-added pin or driver round trip fails here."""
+    sc = spark.sparkContext
+    group = "test-ngram-jaccard-construct"
+    sc.setJobGroup(group, "dedup_ngram_jaccard construct")
+    try:
+        dedup_ngram_jaccard(spark, SF_DIR)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= 9, jobs
+
+
 def test_shingle_id_sets_dense_sorted_int(spark):
     """The dictionary ids are exactly a permutation of 0..|vocab|−1 (the
     two-level packing is DENSE), each document's array is sorted (the
@@ -83,12 +165,32 @@ def test_shingle_id_sets_dense_sorted_int(spark):
     sets = [[f"s{i}", f"s{i+1}", f"s{i+2}"] for i in range(20)]
     ids = _shingle_id_sets(_sh_frame(spark, sets))
     assert dict(ids.dtypes)["ids"] == "array<int>"
+    assert dict(ids.dtypes)["order"] == "array<int>"
     rows = ids.collect()
     all_ids = sorted({i for r in rows for i in r.ids})
     vocab = len({s for ss in sets for s in ss})
     assert all_ids == list(range(vocab))
     for r in rows:
         assert list(r.ids) == sorted(set(r.ids)), "ids must be sorted+unique"
+    # `order` is the prefix order (df ASC, sid ASC), df counted on the
+    # input sets; each shingle here has its own doc set, which names the
+    # shingle behind every sid
+    docs_of_sid, docs_of_shingle = defaultdict(set), defaultdict(set)
+    for r in rows:
+        for i in r.ids:
+            docs_of_sid[i].add(r.doc_id)
+    for d, ss in enumerate(sets):
+        for s in ss:
+            docs_of_shingle[s].add(d)
+    shingle_of = {frozenset(d): s for s, d in docs_of_shingle.items()}
+    assert len(shingle_of) == vocab
+    df = {s: len(d) for s, d in docs_of_shingle.items()}
+    for r in rows:
+        names = [shingle_of[frozenset(docs_of_sid[i])] for i in r.ids]
+        assert sorted(names) == sorted(sets[r.doc_id])
+        assert list(r.order) == sorted(
+            r.ids, key=lambda i: (df[shingle_of[frozenset(docs_of_sid[i])]], i)
+        )
 
 
 # --- Arrow verify kernel: exact intersection counts --------------------------
