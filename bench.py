@@ -113,6 +113,14 @@ def _stock_probe(spark, sf_dir: str) -> float:
     return round(statistics.median(runs), 3)
 
 
+def _driver_memory() -> str:
+    """Half of the host's MemTotal, capped at 16 GB (what a 32-core,
+    125 GiB reference host ran with): a fixed 16g overcommits a 15 GB host."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(kb // 2048, 16 * 1024)}m"
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")  # local[*] is legal too
@@ -126,7 +134,7 @@ def main() -> None:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", _driver_memory())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

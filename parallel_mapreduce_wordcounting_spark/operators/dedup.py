@@ -25,7 +25,7 @@ counterparts at scale.
 from __future__ import annotations
 
 import pandas as pd  # module-level: the pandas_udf type hints resolve here
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pins import persisting, pin
@@ -516,39 +516,6 @@ def dedup_ngram_jaccard(
     return ngram_jaccard_pairs_of(shingle_sets(spark, sf_dir), threshold)
 
 
-def ngram_prefix_postings(sh: DataFrame, tau: float) -> DataFrame:
-    """The AllPairs prefix index of a shingle-set frame (``doc_id``,
-    ``shingles``): postings (doc_id, shingle, n_sh) restricted to each
-    document's first ``|a| − ⌈τ·|a|⌉ + 1`` shingles under the global
-    (df ASC, shingle) order. Factored out of :func:`dedup_ngram_jaccard`
-    so the hub-pruning property is directly testable on planted corpora
-    (tests/test_round10.py)."""
-    sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
-    posts = sh.select(
-        "doc_id", F.explode("shingles").alias("shingle")
-    )  # shingle sets are distinct already
-    df_sh = posts.groupBy("shingle").agg(F.count("*").alias("df_sh"))
-    return (
-        posts.join(df_sh, "shingle")
-        .join(sizes, "doc_id")
-        .withColumn(
-            "pos",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy("df_sh", "shingle")
-            ),
-        )
-        # prefix length |a| − ⌈τ·|a|⌉ + 1; the 1e-9 backs the product off
-        # fp overshoot (a τ·n that lands just above its true integer value
-        # would ceil one too high and truncate the prefix LOSSILY;
-        # undershoot only lengthens it)
-        .where(
-            F.col("pos")
-            <= F.col("n_sh") - F.ceil(tau * F.col("n_sh") - 1e-9) + 1
-        )
-        .select("doc_id", "shingle", "n_sh")
-    )
-
-
 def _shingle_id_sets(sh: DataFrame) -> DataFrame:
     """Dictionary-encode a (pinned) shingle-set frame into ``(doc_id,
     ids, order)``: ``ids`` is the document's id array sorted ascending —
@@ -640,6 +607,28 @@ def _shingle_id_sets(sh: DataFrame) -> DataFrame:
         )
 
 
+def prefix_postings(sh_ids: DataFrame, tau: float) -> DataFrame:
+    """The AllPairs prefix index of a :func:`_shingle_id_sets` frame:
+    postings ``(doc_id, n, pos, sid)`` for each document's first
+    ``|a| − ⌈τ·|a|⌉ + 1`` ids in its ``order`` (df ASC, sid ASC), with
+    ``n`` = |a| and ``pos`` the 0-based position in that order. Both pair
+    engines build their candidates from it: the Jaccard engine joins it to
+    itself, the containment engine joins it to the full postings of the
+    larger side. A shingle shared by every document is the most frequent
+    id, sorts last in every ``order`` and so never enters it
+    (tests/test_round10.py, tests/test_round11.py)."""
+    n = F.size("order")
+    # the 1e-9 backs the product off fp overshoot (a τ·n that lands just
+    # above its true integer value would ceil one too high and truncate
+    # the prefix LOSSILY; undershoot only lengthens it)
+    plen = (n - F.ceil(tau * n - 1e-9) + 1).cast("int")
+    return sh_ids.select(
+        "doc_id",
+        n.alias("n"),
+        F.posexplode(F.slice("order", 1, plen)).alias("pos", "sid"),
+    )
+
+
 def _pair_intersect_counts(batches):
     """Arrow verify kernel: exact |A∩B| per candidate pair over SORTED
     dictionary-id arrays (columns ``doc_id_a, doc_id_b, sa, sb`` →
@@ -657,10 +646,10 @@ def _pair_intersect_counts(batches):
     intersections only under the PRECONDITION that each array is
     duplicate-free: every element of ``sa`` found in ``sb`` is counted,
     once per occurrence, and ``na``/``nb`` are raw array lengths. The
-    engine's inputs satisfy it (ids unique per doc, arrays sorted
+    Jaccard and containment engines' inputs satisfy it (ids unique per doc, arrays sorted
     ascending by construction in :func:`_shingle_id_sets`, given
-    duplicate-free shingle sets); the Jaccard arithmetic
-    itself stays in Spark SQL so the rounding/threshold expressions are
+    duplicate-free shingle sets); the Jaccard and containment
+    arithmetic itself stays in Spark SQL so the rounding/threshold expressions are
     byte-identical to the r13 form. Peak memory is bounded by the Arrow
     batch size (~10k pairs · ~2·|set| ids · 8 B ≈ tens of MB), not by
     the partition."""
@@ -715,7 +704,7 @@ def ngram_jaccard_pairs_of(sh: DataFrame, tau: float) -> DataFrame:
     occurrence, so a repeated shingle would inflate |A∩B| and |A|.
 
     The shingle frame is pinned first (the r11
-    ``containment_pairs_of`` lesson, dedup.py:855): the dictionary build
+    ``containment_pairs_of`` lesson): the dictionary build
     and the id re-key join inside :func:`_shingle_id_sets` are separate
     plan branches over it, and without pinning each re-runs the full
     document scan + shingle build. Output identical (plan-only); r13 A/B
@@ -744,17 +733,8 @@ def ngram_jaccard_pairs_of(sh: DataFrame, tau: float) -> DataFrame:
     (:func:`_pair_intersect_counts`) instead of the JVM `array_intersect`
     the r13 plan evaluated 2–3× per pair. The Jaccard
     division/threshold/rounding expressions are unchanged."""
-    sh = pin(sh)
-    sh_ids = _shingle_id_sets(sh)
-    n = F.size("order")
-    # prefix length |a| − ⌈τ·|a|⌉ + 1, with the same 1e-9 fp back-off as
-    # ngram_prefix_postings (lossy-ceil guard)
-    plen = (n - F.ceil(tau * n - 1e-9) + 1).cast("int")
-    prefix = sh_ids.select(
-        "doc_id",
-        n.alias("n"),
-        F.posexplode(F.slice("order", 1, plen)).alias("pos", "sid"),
-    )
+    sh_ids = _shingle_id_sets(pin(sh))
+    prefix = prefix_postings(sh_ids, tau)
 
     def side(s: str) -> DataFrame:
         return prefix.select(
@@ -1076,50 +1056,54 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``|A∩B| ≥ ⌈τ·min(|A|,|B|)⌉`` (the larger containment is
     overlap/min), so for the SMALLER side s of any qualifying pair, with
     t = ⌈τ·|s|⌉, the shared set (size ≥ t) cannot fit inside s's last
-    t−1 shingles under s's own (df ASC, shingle) order — at least one
+    t−1 shingles under s's own (df ASC, sid ASC) order — at least one
     shared shingle sits in s's ``|s| − t + 1``-prefix
-    (:func:`ngram_prefix_postings`, the AllPairs bound, which at τ=0.8
-    keeps only ~20% of each document). Candidates are therefore
-    prefix(smaller) ⋈ full(larger) on the shingle — LOSSLESS, and unlike
-    the two-sided Jaccard filter it needs no global order agreement
-    between the sides, only the smaller side's own suffix bound. The hub
-    shingle is the most frequent token, sorts last in every document's
-    order, falls outside every prefix, and generates ZERO candidates
-    (pinned on a planted-hub corpus in tests/test_round11.py); the
-    larger side's full postings only meet PREFIX entries, so fan-out per
-    shingle is df_prefix(s)·df(s), not df(s)². Candidates are then
-    verified with the exact JVM-side ``array_intersect`` over the full
-    shingle arrays — output is bitwise identical to the unfiltered
-    all-pairs oracle."""
+    (:func:`prefix_postings`, the AllPairs bound the Jaccard engine uses
+    too, which at τ=0.8 keeps only ~20% of each document). Candidates are
+    therefore prefix(smaller) ⋈ full(larger) on the shingle id —
+    LOSSLESS, and unlike the two-sided Jaccard filter it needs no global
+    order agreement between the sides, only the smaller side's own suffix
+    bound. The hub shingle is the most frequent token, sorts last in
+    every document's order, falls outside every prefix, and generates
+    ZERO candidates (pinned on a planted-hub corpus in
+    tests/test_round11.py); the larger side's full postings only meet
+    PREFIX entries, so fan-out per shingle is df_prefix(s)·df(s), not
+    df(s)². Candidates are then verified with the exact Arrow kernel
+    (:func:`_pair_intersect_counts`) over the full dictionary-id sets —
+    output is bitwise identical to the unfiltered all-pairs oracle. The
+    kernel counts exact intersections only over duplicate-free sets,
+    which ``shingle_sets`` guarantees here (``array_distinct``)."""
     return containment_pairs_of(shingle_sets(spark, sf_dir), CONTAINMENT_THRESHOLD)
 
 
 def containment_pairs_of(sh: DataFrame, tau: float) -> DataFrame:
     """Exact containment pairs (either direction ≥ ``tau``) over a
     (doc_id, shingles) frame — the one-sided-prefix engine behind
-    :func:`dedup_containment` (docstring there), factored out so the hub
-    pruning and losslessness are directly testable on planted corpora
-    (tests/test_round11.py, the ngram_jaccard_pairs_of pattern).
+    :func:`dedup_containment` (docstring there), reusable over any
+    (doc_id, shingles) input whose shingle arrays are duplicate-free.
+    That precondition is the caller's: the verify kernel
+    (:func:`_pair_intersect_counts`) counts every matching occurrence, so
+    a repeated shingle would inflate |A∩B| and |A|.
 
-    The shingle frame is pinned first: five plan branches
-    consume it (prefix build, sizes, full postings, and both verify-join
-    sides), and without materialization each branch re-scans and
-    re-shingles the corpus. Round-12 single-change A/B (same session,
-    sf0.1, min of 2, output-identical 256 pairs): removing ONLY this
-    checkpoint takes the query 3.3 s → 10.6 s (~3.2×); the other r11 fix
-    (distinct placement) is A/B'd at the output-distinct comment below."""
-    sh = pin(sh)
-    pref = ngram_prefix_postings(sh, tau)
-    posts = sh.select(
+    It shares the Jaccard engine's dictionary (:func:`_shingle_id_sets`),
+    prefix builder (:func:`prefix_postings`) and Arrow verify; only the
+    join rule differs (one-sided prefix ⋈ full postings here, two-sided
+    prefix + size filter + positional bound there). The shingle frame is
+    pinned first: the dictionary build and the id re-key join inside
+    :func:`_shingle_id_sets` are separate plan branches over it, and
+    without materialization each re-scans and re-shingles the corpus
+    (round-12 A/B with the string engine, sf0.1, output-identical 256
+    pairs: removing ONLY this pin took the query 3.3 s → 10.6 s)."""
+    sh_ids = _shingle_id_sets(pin(sh))
+    posts = sh_ids.select(
         F.col("doc_id").alias("doc_id_big"),
-        F.explode("shingles").alias("shingle"),
-        F.size("shingles").alias("n_big"),
+        F.explode("ids").alias("sid"),
+        F.size("ids").alias("n_big"),
     )
     cand = (
-        pref.select(
-            F.col("doc_id").alias("doc_id_small"), "shingle", F.col("n_sh").alias("n_small")
-        )
-        .join(posts, "shingle")
+        prefix_postings(sh_ids, tau)
+        .select(F.col("doc_id").alias("doc_id_small"), "sid", F.col("n").alias("n_small"))
+        .join(posts, "sid")
         # the prefix side must be the smaller-or-equal side of the pair
         # (ties: either doc's prefix is a valid witness, so <= with the
         # self-pair excluded keeps both orientations and distinct() below
@@ -1133,24 +1117,19 @@ def containment_pairs_of(sh: DataFrame, tau: float) -> DataFrame:
             F.greatest("doc_id_small", "doc_id_big").alias("doc_id_b"),
         )
     )
-    # (r13 note: the Jaccard engine's dictionary-encoded verify was A/B'd
-    # here too and measured a WASH — 2.57/2.64 s vs 2.58/2.63 s at sf0.1 —
-    # because the τ=0.8 one-sided prefix keeps the candidate stream small
-    # enough that the string intersect never dominates, while the
-    # dictionary + re-keyed set build costs ~0.7 s; the string verify
-    # stays.)
     out = (
         cand.join(
-            sh.select(F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("sa")),
+            sh_ids.select(F.col("doc_id").alias("doc_id_a"), F.col("ids").alias("sa")),
             "doc_id_a",
         )
         .join(
-            sh.select(F.col("doc_id").alias("doc_id_b"), F.col("shingles").alias("sb")),
+            sh_ids.select(F.col("doc_id").alias("doc_id_b"), F.col("ids").alias("sb")),
             "doc_id_b",
         )
-        .withColumn("c", F.size(F.array_intersect("sa", "sb")))
-        .withColumn("ca", F.col("c") / F.size("sa"))
-        .withColumn("cb", F.col("c") / F.size("sb"))
+        .select("doc_id_a", "doc_id_b", "sa", "sb")
+        .mapInArrow(_pair_intersect_counts, _INTERSECT_SCHEMA)
+        .withColumn("ca", F.col("c") / F.col("na"))
+        .withColumn("cb", F.col("c") / F.col("nb"))
         .where((F.col("ca") >= tau) | (F.col("cb") >= tau))
     )
     # Dedupe at the OUTPUT, not between candidate generation and verify: a
@@ -1159,12 +1138,12 @@ def containment_pairs_of(sh: DataFrame, tau: float) -> DataFrame:
     # by the prefix length — ≤ ~0.2·|doc| at τ=0.8, a constant factor
     # independent of corpus size — while a mid-pipeline distinct costs a
     # full extra exchange over the candidate set. Round-12 single-change
-    # A/B (same session/protocol as the localCheckpoint A/B in the
-    # docstring above): moving ONLY this distinct mid-pipeline takes the
-    # query 3.3 s → 5.0 s (~1.5×) at sf0.1, output-identical. The Jaccard
-    # engine above keeps its mid-pipeline distinct because its τ=0.3
-    # prefixes cover ~70% of each document, where the multiplicity bound
-    # is no longer small.
+    # A/B (same session/protocol as the pin A/B in the docstring above):
+    # moving ONLY this distinct mid-pipeline takes the query 3.3 s → 5.0 s
+    # (~1.5×) at sf0.1, output-identical. The Jaccard engine groups its
+    # candidates per pair mid-pipeline instead: its τ=0.3 prefixes cover
+    # ~70% of each document, where the multiplicity bound is no longer
+    # small, and its positional bound needs the per-pair match counts.
     return out.select(
         "doc_id_a",
         "doc_id_b",

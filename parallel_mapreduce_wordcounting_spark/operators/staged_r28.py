@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..pins import persisting
+from ..pins import persisting, pin
 from ..sources.loader import load_table, ts_day
 from .exact import floor_day_us_sql, money_cents, money_cents_sql
 
@@ -167,10 +167,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("m", "n_communities", "q_modularity")
         )
-        rows = out.collect()
-        return out.sparkSession.createDataFrame(
-            rows, "m long, n_communities long, q_modularity double"
-        )
+        return pin(out)
 
 
 # --- Wilcoxon signed-rank (paired halves) ----------------------------------------------

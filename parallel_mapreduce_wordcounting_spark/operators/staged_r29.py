@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pins import persisting
+from ..pins import persisting, pin
 from ..sources.loader import load_table
 from .exact import floor_day_us_sql
 
@@ -300,10 +300,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("m2") / 2).cast("long").alias("m"),
             F.round(num / F.nullif(den, F.lit(0.0)), 6).alias("r_assortativity"),
         )
-        rows = out.collect()
-        return out.sparkSession.createDataFrame(
-            rows, "m long, r_assortativity double"
-        )
+        return pin(out)
 
 
 # --- attribution-window sensitivity sweep ------------------------------------------------------

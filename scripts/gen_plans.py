@@ -76,16 +76,19 @@ SHOWCASE = {
     "bigint sets instead of string arrays (a bijection, so overlap and "
     "sizes are exact; the string intersect was 5.7 s of the 7.7 s "
     "query) - interleaved A/B 7.7-10.0 -> 4.7-5.1 s, output identical.",
-    "dedup_containment": "Containment pairs (round-11 form): ONE-SIDED "
-    "AllPairs prefix filter - the emission condition equals overlap >= "
-    "ceil(tau*min(|A|,|B|)), so prefix(smaller) joins FULL postings of "
-    "the larger side (no global-order agreement needed, lossless); the "
-    "shingle frame is localCheckpoint-materialized once for its five "
-    "consumer branches, and candidate dedup rides the (tiny) output "
-    "instead of a mid-pipeline exchange (multiplicity bounded by the "
-    "tau=0.8 prefix length, ~0.2*|doc|). Round-12 single-change A/Bs at "
-    "sf0.1 (same session, output-identical): no checkpoint 10.6 s and "
-    "mid-pipeline distinct 5.0 s vs the shipped 3.3 s.",
+    "dedup_containment": "Containment pairs: ONE-SIDED AllPairs prefix "
+    "filter on the Jaccard engine's dictionary - the emission condition "
+    "equals overlap >= ceil(tau*min(|A|,|B|)), so the smaller side's "
+    "prefix (the leading slice of its (df ASC, sid) `order`, the same "
+    "prefix_postings builder the Jaccard engine uses) joins the FULL id "
+    "postings of the larger side (no global-order agreement needed, "
+    "lossless), and the same Arrow kernel as the Jaccard engine counts "
+    "the exact overlap of the sorted id sets. The shingle frame and the "
+    "id sets are pinned, so the plan roots in checkpointed scans, and "
+    "candidate dedup rides the (tiny) output instead of a mid-pipeline "
+    "exchange (multiplicity bounded by the tau=0.8 prefix length, "
+    "~0.2*|doc|; round-12 A/B at sf0.1: mid-pipeline distinct 5.0 s vs "
+    "3.3 s).",
     "mm_ppm_decode": "Registered multimodal decode eats REAL files "
     "(round-12 form, r11 verdict item 6): a binaryFile scan over the "
     "pre-materialized deterministic fixture dir (sources/binfix.py "

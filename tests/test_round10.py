@@ -19,8 +19,9 @@ from pyspark.sql import functions as F
 
 from parallel_mapreduce_wordcounting_spark.operators import staged_r10
 from parallel_mapreduce_wordcounting_spark.operators.dedup import (
+    _shingle_id_sets,
     ngram_jaccard_pairs_of,
-    ngram_prefix_postings,
+    prefix_postings,
 )
 
 from .conftest import SF_DIR
@@ -53,8 +54,13 @@ def test_ngram_prefix_excludes_boilerplate_hub(spark):
     the unfiltered join fanned N·(N−1)/2 candidate pairs through it."""
     n = 30
     sets = [[f"u{i}_{j}" for j in range(7)] + ["HUB"] for i in range(n)]
-    ranked = ngram_prefix_postings(_sh_frame(spark, sets), 0.3)
-    assert ranked.where(F.col("shingle") == "HUB").count() == 0
+    sh_ids = _shingle_id_sets(_sh_frame(spark, sets))
+    rows = sh_ids.collect()
+    # HUB is the one shingle every document shares, and the last in every
+    # document's order
+    (hub,) = set.intersection(*(set(r.ids) for r in rows))
+    assert all(r.order[-1] == hub for r in rows)
+    assert prefix_postings(sh_ids, 0.3).where(F.col("sid") == hub).count() == 0
     # and therefore the join sees zero candidates — the true result (all
     # pairwise J = 1/15 < 0.3) is empty, reached without any fan-out
     assert ngram_jaccard_pairs_of(_sh_frame(spark, sets), 0.3).count() == 0

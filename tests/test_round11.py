@@ -13,14 +13,18 @@ sub-document case (a short doc embedded in a long one) still pairs."""
 from __future__ import annotations
 
 import itertools
+import math
 import random
+from fractions import Fraction
 
+import pytest
 from pyspark.sql import functions as F
 
 from parallel_mapreduce_wordcounting_spark.operators.dedup import (
     CONTAINMENT_THRESHOLD,
+    _shingle_id_sets,
     containment_pairs_of,
-    ngram_prefix_postings,
+    prefix_postings,
 )
 
 
@@ -51,8 +55,14 @@ def test_containment_hub_generates_no_candidates(spark):
     n = 30
     sets = [[f"u{i}_{j}" for j in range(7)] + ["HUB"] for i in range(n)]
     sh = _sh_frame(spark, sets)
-    ranked = ngram_prefix_postings(sh, CONTAINMENT_THRESHOLD)
-    assert ranked.where(F.col("shingle") == "HUB").count() == 0
+    sh_ids = _shingle_id_sets(sh)
+    rows = sh_ids.collect()
+    # HUB is the one shingle every document shares, and the last in every
+    # document's order
+    (hub,) = set.intersection(*(set(r.ids) for r in rows))
+    assert all(r.order[-1] == hub for r in rows)
+    prefix = prefix_postings(sh_ids, CONTAINMENT_THRESHOLD)
+    assert prefix.where(F.col("sid") == hub).count() == 0
     # true result: every pair shares only HUB, C = 1/8 < 0.8 → empty,
     # reached without any hub fan-out
     assert containment_pairs_of(sh, CONTAINMENT_THRESHOLD).count() == 0
@@ -73,6 +83,46 @@ def test_containment_filter_is_lossless(spark):
             ).collect()
         }
         assert got == _brute_containment(sets, CONTAINMENT_THRESHOLD), f"trial {trial}"
+
+
+def _boundary_corpus(seed, tau):
+    """Random pool docs plus planted pairs whose overlap is exactly
+    ⌈τ·min(|A|,|B|)⌉ — the least a qualifying pair can share — in both an
+    equal-size and a small ⊂ big shape, and a pair one shingle short of
+    it. A planted pair's own shingles occur once and its shared ones
+    twice, so the shared ones sort LAST in the smaller side's order and
+    exactly one of them sits in its prefix: one prefix slot fewer loses
+    the pair."""
+    rng = random.Random(seed)
+    pool = [f"s{i}" for i in range(12)]
+    sets = [rng.sample(pool, rng.randint(2, 9)) for _ in range(15)]
+    for p in range(6):
+        k_small = rng.randint(2, 8)
+        k_big = k_small if p % 3 == 0 else k_small + rng.randint(1, 6)
+        t = math.ceil(Fraction(str(tau)) * k_small) - (p % 3 == 2)
+        shared = [f"p{p}_c{i}" for i in range(t)]
+        sets.append(shared + [f"p{p}_a{i}" for i in range(k_small - t)])
+        sets.append(shared + [f"p{p}_b{i}" for i in range(k_big - t)])
+    return sets
+
+
+@pytest.mark.parametrize("seed", [11, 12])
+@pytest.mark.parametrize("tau", [0.5, 0.8, 1.0])
+def test_containment_matches_brute_force_at_boundaries(spark, tau, seed):
+    """The containment engine (dictionary prefix ⋈ full postings, Arrow
+    verify) equals brute force on corpora built around the overlap
+    threshold, at τ = 1.0 too, where every prefix is a single id."""
+    sets = _boundary_corpus(seed, tau)
+    got = {
+        (r.doc_id_a, r.doc_id_b, r.cont_a, r.cont_b)
+        for r in containment_pairs_of(_sh_frame(spark, sets), tau).collect()
+    }
+    want = _brute_containment(sets, tau)
+    # the planted pairs are the last 12 docs; every third is a near miss
+    pairs = {(a, b) for a, b, _, _ in want}
+    planted = [(len(sets) - 12 + 2 * p, len(sets) - 11 + 2 * p) for p in range(6)]
+    assert [pr in pairs for pr in planted] == [p % 3 != 2 for p in range(6)]
+    assert got == want
 
 
 def test_containment_keeps_subdocument_pair(spark):

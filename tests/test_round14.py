@@ -1,10 +1,11 @@
 """Round-14 pins (optimization round 2): the Jaccard engine's dense-int32
 dictionary + Arrow verify kernel must be output-identical to a string-array
 verify (the r13 ADVICE consistency item), its pair-level positional bound
-must keep every pair at the threshold, its construct-time job count must
-stay within budget, the verify kernel's exact intersection counts, and the
-MaxSim kernel's bounded-memory chunking (the r13 ADVICE memory item) must
-be score-identical to the unchunked fold."""
+must keep every pair at the threshold, its and the containment engine's
+construct-time job counts must stay within budget, the verify kernel's
+exact intersection counts, and the MaxSim kernel's bounded-memory
+chunking (the r13 ADVICE memory item) must be score-identical to the
+unchunked fold."""
 
 from __future__ import annotations
 
@@ -24,6 +25,7 @@ from parallel_mapreduce_wordcounting_spark.operators import staged_r46
 from parallel_mapreduce_wordcounting_spark.operators.dedup import (
     _pair_intersect_counts,
     _shingle_id_sets,
+    dedup_containment,
     dedup_ngram_jaccard,
     ngram_jaccard_pairs_of,
 )
@@ -141,19 +143,32 @@ def test_jaccard_positional_bound_keeps_threshold_pairs(spark, tau, seed):
     assert got == want
 
 
+def _construct_jobs(spark, fn) -> int:
+    """Spark jobs fired while ``fn(spark, SF_DIR)`` builds its DataFrame."""
+    sc = spark.sparkContext
+    group = f"test-construct-{fn.__name__}"
+    sc.setJobGroup(group, f"{fn.__name__} construct")
+    try:
+        fn(spark, SF_DIR)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_ngram_jaccard_construct_job_budget(spark):
     """Spark jobs fired while ``dedup_ngram_jaccard`` builds its DataFrame
     (its pins and the dictionary's partition counts) stay within 9, so a
     re-added pin or driver round trip fails here."""
-    sc = spark.sparkContext
-    group = "test-ngram-jaccard-construct"
-    sc.setJobGroup(group, "dedup_ngram_jaccard construct")
-    try:
-        dedup_ngram_jaccard(spark, SF_DIR)
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = _construct_jobs(spark, dedup_ngram_jaccard)
+    assert 0 < jobs <= 9, jobs
+
+
+def test_containment_construct_job_budget(spark):
+    """Spark jobs fired while ``dedup_containment`` builds its DataFrame
+    (the shingle pin, the dictionary's partition counts and the id-set
+    pin it shares with the Jaccard engine) stay within 9."""
+    jobs = _construct_jobs(spark, dedup_containment)
     assert 0 < jobs <= 9, jobs
 
 
