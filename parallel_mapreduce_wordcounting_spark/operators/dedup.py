@@ -28,7 +28,7 @@ import pandas as pd  # module-level: the pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pins import persisting, pin
+from ..pins import pin
 from ..registry import REGISTRY, register
 from ..sources.loader import load_table
 
@@ -487,7 +487,9 @@ def dedup_ngram_jaccard(
     inverted-index core:
 
     1. global token order = (document frequency ASC, shingle) — rarest
-       first, deterministic;
+       first, deterministic. One global sort of the shingle counts numbers
+       the dictionary in that order, so a shingle's id is its rank and
+       each document's sorted id array is its prefix order;
     2. each document indexes only its first ``|a| − ⌈τ·|a|⌉ + 1``
        shingles in that order (its *prefix*). The first shared shingle of
        any pair with J ≥ τ provably sits in BOTH prefixes: were it past
@@ -518,106 +520,54 @@ def dedup_ngram_jaccard(
 
 def _shingle_id_sets(sh: DataFrame) -> DataFrame:
     """Dictionary-encode a (pinned) shingle-set frame into ``(doc_id,
-    ids, order)``: ``ids`` is the document's id array sorted ascending —
-    the cheap VERIFY medium of the prefix engine (round 13; densified +
-    sorted round 14) — and ``order`` the same ids sorted by the global
-    prefix order (df ASC, sid ASC), whose leading slice is the
-    document's prefix. The dictionary is a ``groupBy(shingle)`` count, so
-    df rides the exchange the distinct vocabulary needs anyway.
+    ids)``, ``ids`` the document's shingle ids sorted ascending.
 
-    The exact-verification step intersects each candidate pair's full
-    shingle sets; doing that on ``array<string>`` hashes ~|A|+|B| UTF8
-    strings per pair and dominated the engine (measured at sf0.1:
-    5.67 s of a 7.7 s query for the 596k-candidate verify alone).
-    Re-keying each distinct shingle to a dense id via a DICTIONARY —
-    not a hash — keeps the step provably exact: the shingle→sid map is
-    a bijection by construction (ids are unique per dictionary row), so
-    |A∩B| and |A|/|B| are preserved EXACTLY, with no collision caveat
-    at any scale.
-
-    Round-14 id layout (two-level DENSE packing, the r13 verdict's
-    follow-up): ``monotonically_increasing_id`` over the
-    partition-sorted dictionary gives (partition ordinal ≪ 33 + row
-    offset); a one-row-per-partition count aggregate (bounded driver
-    metadata, ≤ #shuffle-partitions rows) turns that into
-    ``sid = base[partition] + offset`` — ids are exactly
-    0..|vocab|−1, cast to int32 while |vocab| < 2³¹ (halving verify
-    bytes; past that the same code keeps bigint, decided from the
-    collected total, so the dtype is scale-adaptive, not a local[]
-    assumption). The bases travel as a ``create_map`` LITERAL with one
-    entry per dictionary partition, so the collected rows and the plan
-    grow linearly with ``spark.sql.shuffle.partitions``: fine at tens to
-    hundreds of partitions, awkward at cluster counts in the thousands
-    (there a window sum over the counts joined back on the partition id
-    keeps it distributed). ``ids`` is emitted SORTED so the Arrow verify
-    kernel (:func:`_pair_intersect_counts`) can merge-intersect
+    The dictionary is a word count: ``groupBy(shingle)`` gives each
+    shingle's document frequency df, and one global sort on (df ASC,
+    shingle ASC) numbers the shingles — ``monotonically_increasing_id``
+    after a sort is unique and increasing in sort order (bigint, at most
+    about #partitions·2³³). So the sid IS the AllPairs prefix order
+    (rarest first, ties by shingle: a total order), and each document's
+    ascending ``ids`` is at once its prefix order — whose leading slice
+    :func:`prefix_postings` indexes — and the sorted input the Arrow
+    verify kernel (:func:`_pair_intersect_counts`) merge-intersects
     without re-sorting.
 
-    CONSISTENCY GUARANTEE: the trailing ``pin`` — not the
-    sort — is what guarantees every verify-join side reads ONE
-    materialization of the dictionary ids. (With the dense packing the
-    ids are additionally a deterministic function of the vocabulary —
-    rank within hash partition plus cumulative partition sizes — but a
-    future change must still keep the pin: recompute-on-use
-    of `monotonically_increasing_id` output is documented
-    non-deterministic.) tests/test_round14.py pins output identity
-    against a string-array verify on a planted corpus."""
+    Verifying on ids rather than ``array<string>`` keeps the step exact
+    and cheap: the shingle→sid map is a bijection (one dictionary row per
+    shingle), so |A∩B| and |A|/|B| are preserved with no collision
+    caveat at any scale, while a string verify hashed ~|A|+|B| UTF8
+    strings per pair (5.67 s of a 7.7 s query at sf0.1, round 13).
+    tests/test_round14.py pins the dictionary contract and output
+    identity against a string-array verify on a planted corpus."""
     posts = sh.select("doc_id", F.explode("shingles").alias("shingle"))
-    with persisting() as keep:
-        # kept: the counts action and the re-key join read ONE materialization
-        dct = keep(
-            posts.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .sortWithinPartitions("shingle")
-            .withColumn("mid", F.monotonically_increasing_id())
-        )
-        pid = F.shiftright("mid", 33)
-        off = F.col("mid").bitwiseAND(F.lit((1 << 33) - 1))
-        counts = sorted(
-            (int(r["pid"]), int(r["n"]))
-            for r in dct.select(pid.alias("pid"))
-            .groupBy("pid")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )
-        bases: dict[int, int] = {}
-        acc = 0
-        for p, n in counts:
-            bases[p] = acc
-            acc += n
-        use_int = acc < (1 << 31)
-        if bases:
-            base_map = F.create_map(
-                *[x for p, b in bases.items() for x in (F.lit(p), F.lit(b))]
-            )
-            sid = F.element_at(base_map, pid) + off
-        else:  # empty vocabulary: joins below are empty either way
-            sid = off
-        sid = sid.cast("int") if use_int else sid
-        dct2 = dct.select("shingle", sid.alias("sid"), "df")
-        # pinned: the two verify-join and two prefix self-join sides read it;
-        # unpinned, each re-runs the explode+dictionary join (the
-        # "broadcast-rebuilt branches" pin rule, COVERAGE.md r13)
-        order = F.sort_array(F.collect_list(F.struct("df", "sid"))).getField("sid")
-        return pin(
-            posts.join(dct2, "shingle")
-            .groupBy("doc_id")
-            .agg(order.alias("order"))
-            .select("doc_id", F.sort_array("order").alias("ids"), "order")
-        )
+    dct = (
+        posts.groupBy("shingle")
+        .agg(F.count("*").alias("df"))
+        .orderBy("df", "shingle")
+        .select("shingle", F.monotonically_increasing_id().alias("sid"))
+    )
+    # pinned: range bounds and monotonically_increasing_id may change on
+    # recompute, so every consumer must read one materialization
+    return pin(
+        posts.join(dct, "shingle")
+        .groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list("sid")).alias("ids"))
+    )
 
 
 def prefix_postings(sh_ids: DataFrame, tau: float) -> DataFrame:
     """The AllPairs prefix index of a :func:`_shingle_id_sets` frame:
     postings ``(doc_id, n, pos, sid)`` for each document's first
-    ``|a| − ⌈τ·|a|⌉ + 1`` ids in its ``order`` (df ASC, sid ASC), with
-    ``n`` = |a| and ``pos`` the 0-based position in that order. Both pair
-    engines build their candidates from it: the Jaccard engine joins it to
-    itself, the containment engine joins it to the full postings of the
-    larger side. A shingle shared by every document is the most frequent
-    id, sorts last in every ``order`` and so never enters it
+    ``|a| − ⌈τ·|a|⌉ + 1`` ids — its ``ids`` are sorted in the global
+    prefix order (df ASC, shingle ASC), because the sid is that rank —
+    with ``n`` = |a| and ``pos`` the 0-based position in ``ids``. Both
+    pair engines build their candidates from it: the Jaccard engine joins
+    it to itself, the containment engine joins it to the full postings of
+    the larger side. A shingle shared by every document is the most
+    frequent id, sorts last in every ``ids`` and so never enters it
     (tests/test_round10.py, tests/test_round11.py)."""
-    n = F.size("order")
+    n = F.size("ids")
     # the 1e-9 backs the product off fp overshoot (a τ·n that lands just
     # above its true integer value would ceil one too high and truncate
     # the prefix LOSSILY; undershoot only lengthens it)
@@ -625,7 +575,7 @@ def prefix_postings(sh_ids: DataFrame, tau: float) -> DataFrame:
     return sh_ids.select(
         "doc_id",
         n.alias("n"),
-        F.posexplode(F.slice("order", 1, plen)).alias("pos", "sid"),
+        F.posexplode(F.slice("ids", 1, plen)).alias("pos", "sid"),
     )
 
 
@@ -641,16 +591,18 @@ def _pair_intersect_counts(batches):
     dedup_ngram_jaccard_after.txt nodes 24–25). Packing
     (pair_idx, id) into one int64 key keeps the probe a single
     vectorized call per batch; the pack is collision-free while
-    batch_rows · |vocab| < 2⁶² (asserted — at the default 10k-row Arrow
-    batch this allows vocabularies past 10¹⁷). Counts are EXACT set
+    batch_rows · (max sid + 1) < 2⁶² (asserted). The dictionary's sids
+    are ``monotonically_increasing_id`` ranks, at most about
+    #partitions·2³³, so at the default 10k-row Arrow batch the bound
+    holds up to ~50,000 dictionary partitions. Counts are EXACT set
     intersections only under the PRECONDITION that each array is
     duplicate-free: every element of ``sa`` found in ``sb`` is counted,
     once per occurrence, and ``na``/``nb`` are raw array lengths. The
-    Jaccard and containment engines' inputs satisfy it (ids unique per doc, arrays sorted
-    ascending by construction in :func:`_shingle_id_sets`, given
-    duplicate-free shingle sets); the Jaccard and containment
-    arithmetic itself stays in Spark SQL so the rounding/threshold expressions are
-    byte-identical to the r13 form. Peak memory is bounded by the Arrow
+    Jaccard and containment engines' inputs satisfy it (ids unique per
+    doc, arrays sorted ascending by construction in
+    :func:`_shingle_id_sets`, given duplicate-free shingle sets); the
+    Jaccard and containment arithmetic itself stays in Spark SQL so the
+    rounding/threshold expressions are byte-identical to the r13 form. Peak memory is bounded by the Arrow
     batch size (~10k pairs · ~2·|set| ids · 8 B ≈ tens of MB), not by
     the partition."""
     import numpy as np
@@ -712,9 +664,10 @@ def ngram_jaccard_pairs_of(sh: DataFrame, tau: float) -> DataFrame:
     16.2 s unpinned vs 7.6 s pinned (~2.1×).
 
     Candidates come from the pinned id sets alone: each document's prefix
-    is the leading slice of its ``order`` column (ids sorted by the global
-    (df ASC, sid) order, a total order, so the prefix filter stays
-    lossless), posexploded so every posting carries its 0-based position.
+    is the leading slice of its ``ids`` (:func:`prefix_postings`; the sid
+    is the rank in the global (df ASC, shingle ASC) order, a total order,
+    so the prefix filter stays lossless), posexploded so every posting
+    carries its 0-based position.
     The prefix self-join's rows are grouped per pair on the exchange the
     candidate ``distinct`` used to take, counting the matches ``m`` and
     keeping the last matched positions (ia, ib); only a pair whose bound
@@ -728,8 +681,8 @@ def ngram_jaccard_pairs_of(sh: DataFrame, tau: float) -> DataFrame:
     Earlier physical changes, each verified output-identical (256 pairs at
     sf0.1, interleaved A/Bs in OPTIMIZATION_r13.md / OPTIMIZATION_r14.md):
     exact verification on dictionary-encoded sets instead of string
-    arrays (md5-hash join keys measured SLOWER: 8.3–9.2 s vs 7.7 s); ids
-    densified to int32; and ONE Arrow kernel pass per pair
+    arrays (md5-hash join keys measured SLOWER: 8.3–9.2 s vs 7.7 s); and
+    ONE Arrow kernel pass per pair
     (:func:`_pair_intersect_counts`) instead of the JVM `array_intersect`
     the r13 plan evaluated 2–3× per pair. The Jaccard
     division/threshold/rounding expressions are unchanged."""
@@ -1056,7 +1009,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``|A∩B| ≥ ⌈τ·min(|A|,|B|)⌉`` (the larger containment is
     overlap/min), so for the SMALLER side s of any qualifying pair, with
     t = ⌈τ·|s|⌉, the shared set (size ≥ t) cannot fit inside s's last
-    t−1 shingles under s's own (df ASC, sid ASC) order — at least one
+    t−1 shingles under s's own (df ASC, shingle ASC) order — the
+    ascending order of its dictionary ids — at least one
     shared shingle sits in s's ``|s| − t + 1``-prefix
     (:func:`prefix_postings`, the AllPairs bound the Jaccard engine uses
     too, which at τ=0.8 keeps only ~20% of each document). Candidates are

@@ -58,37 +58,34 @@ SHOWCASE = {
     "anyway), so hub-skewed graphs get the degeneracy-bounded wedge "
     "fan-out while near-regular graphs skip two joins (idle-box A/B: "
     "-31% at sf0.1). The plan below is the fixture's (unoriented) path.",
-    "dedup_ngram_jaccard": "Exact n-gram Jaccard pairs (round-13 form): "
-    "the full AllPairs/PPJoin prefix filter - postings rank by global "
-    "(df ASC, shingle) order per doc, only the |a|-ceil(tau*|a|)+1 "
-    "prefix enters the pairing self-join (lossless superset theorem), "
-    "a size filter prunes impossible pairs, and exact Jaccard verifies "
-    "candidates from the full shingle arrays JVM-side. A boilerplate "
-    "hub shingle sorts last, leaves every prefix, and fans out ZERO "
-    "pairs (measured: flat 15 s at 60k hub docs where the unfiltered "
-    "core extrapolates to 1.8e9 candidates). Since round 13 the shingle "
-    "frame localCheckpoints before fan-out (its four consumer branches "
-    "re-ran the scan+shingle build; A/B 16.2 -> 7.6 s at sf0.1), so the "
-    "plan roots in a checkpointed scan, not four parquet scans. The r13 "
-    "optimization round additionally pins the ranked prefix postings "
-    "(the candidate self-join's sides each rebuilt the df aggregation + "
-    "rank window) and runs the exact verify on dictionary-encoded "
-    "bigint sets instead of string arrays (a bijection, so overlap and "
-    "sizes are exact; the string intersect was 5.7 s of the 7.7 s "
-    "query) - interleaved A/B 7.7-10.0 -> 4.7-5.1 s, output identical.",
+    "dedup_ngram_jaccard": "Exact n-gram Jaccard pairs: the full "
+    "AllPairs/PPJoin prefix filter on a shingle dictionary. The dictionary "
+    "is a word count (groupBy(shingle) -> df) numbered by ONE global sort "
+    "on (df ASC, shingle), so a shingle's id is its rank and each "
+    "document's sorted id array is its rarest-first order; only the "
+    "|a|-ceil(tau*|a|)+1 prefix of that array enters the pairing "
+    "self-join (lossless superset theorem), a size filter and a per-pair "
+    "positional bound prune pairs that cannot reach tau, and one Arrow "
+    "kernel (MapInArrow) counts the exact overlap of the sorted id sets. "
+    "A boilerplate hub shingle sorts last, leaves every prefix, and fans "
+    "out ZERO pairs (measured: flat 15 s at 60k hub docs where the "
+    "unfiltered core extrapolates to 1.8e9 candidates). The shingle frame "
+    "and the id sets are pinned, so the plan roots in checkpointed scans "
+    "(unpinned, each consumer branch re-ran the scan + shingle build; A/B "
+    "16.2 -> 7.6 s at sf0.1).",
     "dedup_containment": "Containment pairs: ONE-SIDED AllPairs prefix "
     "filter on the Jaccard engine's dictionary - the emission condition "
     "equals overlap >= ceil(tau*min(|A|,|B|)), so the smaller side's "
-    "prefix (the leading slice of its (df ASC, sid) `order`, the same "
-    "prefix_postings builder the Jaccard engine uses) joins the FULL id "
-    "postings of the larger side (no global-order agreement needed, "
-    "lossless), and the same Arrow kernel as the Jaccard engine counts "
-    "the exact overlap of the sorted id sets. The shingle frame and the "
-    "id sets are pinned, so the plan roots in checkpointed scans, and "
-    "candidate dedup rides the (tiny) output instead of a mid-pipeline "
-    "exchange (multiplicity bounded by the tau=0.8 prefix length, "
-    "~0.2*|doc|; round-12 A/B at sf0.1: mid-pipeline distinct 5.0 s vs "
-    "3.3 s).",
+    "prefix (the leading slice of its sorted ids, whose order is the "
+    "(df ASC, shingle) rank; the same prefix_postings builder the "
+    "Jaccard engine uses) joins the FULL id postings of the larger side "
+    "(no global-order agreement needed, lossless), and the same Arrow "
+    "kernel as the Jaccard engine counts the exact overlap of the sorted "
+    "id sets. The shingle frame and the id sets are pinned, so the plan "
+    "roots in checkpointed scans, and candidate dedup rides the (tiny) "
+    "output instead of a mid-pipeline exchange (multiplicity bounded by "
+    "the tau=0.8 prefix length, ~0.2*|doc|; round-12 A/B at sf0.1: "
+    "mid-pipeline distinct 5.0 s vs 3.3 s).",
     "mm_ppm_decode": "Registered multimodal decode eats REAL files "
     "(round-12 form, r11 verdict item 6): a binaryFile scan over the "
     "pre-materialized deterministic fixture dir (sources/binfix.py "

@@ -57,9 +57,9 @@ def test_ngram_prefix_excludes_boilerplate_hub(spark):
     sh_ids = _shingle_id_sets(_sh_frame(spark, sets))
     rows = sh_ids.collect()
     # HUB is the one shingle every document shares, and the last in every
-    # document's order
+    # document's ids (sorted in the prefix order)
     (hub,) = set.intersection(*(set(r.ids) for r in rows))
-    assert all(r.order[-1] == hub for r in rows)
+    assert all(r.ids[-1] == hub for r in rows)
     assert prefix_postings(sh_ids, 0.3).where(F.col("sid") == hub).count() == 0
     # and therefore the join sees zero candidates — the true result (all
     # pairwise J = 1/15 < 0.3) is empty, reached without any fan-out

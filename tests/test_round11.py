@@ -58,9 +58,9 @@ def test_containment_hub_generates_no_candidates(spark):
     sh_ids = _shingle_id_sets(sh)
     rows = sh_ids.collect()
     # HUB is the one shingle every document shares, and the last in every
-    # document's order
+    # document's ids (sorted in the prefix order)
     (hub,) = set.intersection(*(set(r.ids) for r in rows))
-    assert all(r.order[-1] == hub for r in rows)
+    assert all(r.ids[-1] == hub for r in rows)
     prefix = prefix_postings(sh_ids, CONTAINMENT_THRESHOLD)
     assert prefix.where(F.col("sid") == hub).count() == 0
     # true result: every pair shares only HUB, C = 1/8 < 0.8 → empty,
